@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import argparse
 import datetime as dt
+import functools
 import sys
 
 
@@ -34,6 +35,7 @@ def _spark(args):
 
 
 def _crawl_log_input(spark, args):
+    from .functions import crawl as C
     from .sources import jsonl, kafka
 
     if args.brokers:
@@ -44,7 +46,7 @@ def _crawl_log_input(spark, args):
 
         return df.select(
             F.from_json(F.col("value").cast("string"), CRAWL_LOG_SCHEMA).alias("j")
-        ).select("j.*").withColumn("is_heritrix", F.col("thread").isNotNull())
+        ).select("j.*").withColumn("is_heritrix", C.is_heritrix())
     return jsonl.read_crawl_log(spark, args.input)
 
 
@@ -179,19 +181,28 @@ def cmd_streamer(args) -> int:
         df = read_crawl_log(spark, args.input).filter(
             (F.col("timestamp") >= args.ts_from) & (F.col("timestamp") < args.ts_to)
         )
-    from .functions import crawl as C
-
-    out = df.select(
-        "timestamp",
-        C.status_str(F.col("status_code")).alias("status"),
-        "url",
-        C.hop_last(F.col("hop_path")).alias("hop"),
-        C.host_of("url").alias("host"),
-        C.wayback_timestamp(F.col("timestamp")).alias("wayback_ts"),
-    ).limit(args.limit)
+    out = df.select(*_streamer_columns()).limit(args.limit)
     for row in out.collect():
         print(" ".join("-" if v is None else str(v) for v in row))
     return 0
+
+
+@functools.cache
+def _streamer_columns() -> tuple:
+    """The streamer's P-9 projection, built once per process (it names its
+    columns, so it binds to any frame in any session)."""
+    import pyspark.sql.functions as F
+
+    from .functions import crawl as C
+
+    return (
+        F.col("timestamp"),
+        C.status_str(F.col("status_code")).alias("status"),
+        F.col("url"),
+        C.hop_last(F.col("hop_path")).alias("hop"),
+        C.host_of("url").alias("host"),
+        C.wayback_timestamp(F.col("timestamp")).alias("wayback_ts"),
+    )
 
 
 def cmd_etl(args) -> int:
@@ -216,8 +227,7 @@ def cmd_etl(args) -> int:
     from .operators.etl import write_warehouse
     from .sources.jsonl import read_crawl_log
 
-    write_warehouse(read_crawl_log(spark, args.input), args.output)
-    n = spark.read.parquet(args.output).count()
+    n = write_warehouse(read_crawl_log(spark, args.input), args.output)
     print(f"wrote {n} rows to {args.output}")
     return 0
 

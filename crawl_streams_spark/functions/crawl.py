@@ -11,6 +11,8 @@ analysis.py:129-133) we implement the intent and say so.
 
 from __future__ import annotations
 
+import functools
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
@@ -173,6 +175,14 @@ def annotation_rest_raw(annotations: Column | str) -> Column:
 def doc_id(log_timestamp: Column | str, url: Column | str) -> Column:
     """F-8 — Solr document id ``crawl-log:<ts>/<url>`` (report.py:177)."""
     return F.concat(F.lit("crawl-log:"), _c(log_timestamp), F.lit("/"), _c(url))
+
+
+@functools.cache
+def is_heritrix() -> Column:
+    """Variant discriminator: the record carries a thread id
+    (report.py:48-49). Built once per process — it names its column, so
+    it binds to any frame in any session."""
+    return F.col("thread").isNotNull()
 
 
 def crawler_name(thread: Column | str) -> Column:

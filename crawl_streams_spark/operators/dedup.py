@@ -439,15 +439,21 @@ def cluster_duplicates(
     # labels are elementwise NON-INCREASING round over round (propagation
     # takes min(own, neighbors'), the pointer jump takes a further min)
     # and the key set is constant (prop unions the current labels back
-    # in), so for numeric keys "no label moved" ⇔ "count and checksum
+    # in), so for integral keys "no label moved" ⇔ "count and checksum
     # unchanged" — one scan-aggregate over the just-pinned frame instead
     # of a key-shuffle join of two label frames per round. decimal(38,0)
     # keeps the sum exact (bigint keys × any realistic row count stay
     # under 10^38); a NULL sum on a nonempty frame (decimal overflow)
-    # falls back to the join so equality is never vacuous.
-    from pyspark.sql.types import NumericType
+    # falls back to the join so equality is never vacuous. Only integral
+    # keys (and scale-0 decimals) qualify: the cast rounds fractional
+    # keys, so a label that moved between keys rounding alike (0.01 →
+    # 0.00) leaves the checksum unchanged and the loop stops early.
+    from pyspark.sql.types import DecimalType, IntegralType
 
-    numeric_key = isinstance(labels.schema["cluster"].dataType, NumericType)
+    key_type = labels.schema["cluster"].dataType
+    numeric_key = isinstance(key_type, IntegralType) or (
+        isinstance(key_type, DecimalType) and key_type.scale == 0
+    )
 
     def _sig(df: DataFrame):
         row = df.agg(

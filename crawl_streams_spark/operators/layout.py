@@ -22,7 +22,7 @@ from __future__ import annotations
 import math
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 __all__ = [
     "clustered_write",
@@ -42,8 +42,9 @@ def clustered_write(
     cluster_by: list[str] | None = None,
     max_records_per_file: int = 1_000_000,
     mode: str = "overwrite",
-) -> None:
-    """Write a directory-partitioned parquet table with value clustering.
+) -> int:
+    """Write a directory-partitioned parquet table with value clustering;
+    returns the number of rows written.
 
     repartition(partition_by) routes each output partition's rows to one
     writer task; sortWithinPartitions orders rows inside each file so
@@ -52,16 +53,24 @@ def clustered_write(
     several). The sort leads with the partition columns: the partitioned
     writer requires that ordering and would otherwise inject its own
     (unstable) sort, destroying the clustering.
+
+    The count is an observed metric on the frame handed to the writer, so
+    it costs no extra job. It sits ABOVE the shuffle and the sort: an
+    observation below the shuffle is lost when AQE drops an empty stage
+    (every input row filtered out), and reading it then fails.
     """
     out = df.repartition(*partition_by) if partition_by else df
     if cluster_by:
         out = out.sortWithinPartitions(*partition_by, *cluster_by)
+    written = Observation()
     (
-        out.write.mode(mode)
+        out.observe(written, F.count(F.lit(1)).alias("n"))
+        .write.mode(mode)
         .option("maxRecordsPerFile", max_records_per_file)
         .partitionBy(*partition_by)
         .parquet(path)
     )
+    return written.get["n"]
 
 
 def range_sorted_write(

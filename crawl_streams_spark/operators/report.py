@@ -15,8 +15,10 @@ early `thread` check report.py:48-49, http-prefix check report.py:149-151).
 
 from __future__ import annotations
 
+import functools
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from ..functions import crawl as C
 
@@ -39,23 +41,13 @@ _CRAWL_LOG_FIELDS = [
 
 def heritrix_only(df: DataFrame) -> DataFrame:
     """P-2 — keep Heritrix-variant records (report.py:48-49)."""
-    return df.filter(F.col("thread").isNotNull())
+    return df.filter(C.is_heritrix())
 
 
 def crawl_log_lines(df: DataFrame) -> DataFrame:
     """P-3 + P-4 — null→'-' coalescing then the fixed 13-field crawl-log
     line (report.py:53-57). Returns (url, line)."""
-    d = heritrix_only(df)
-    cols = [
-        F.coalesce(F.col(c).cast("string"), F.lit("-")).alias(c)
-        for c in _CRAWL_LOG_FIELDS
-    ]
-    d = d.select(*cols)
-    fmt = " ".join(["%s"] * len(_CRAWL_LOG_FIELDS))
-    return d.select(
-        F.col("url"),
-        F.format_string(fmt, *[F.col(c) for c in _CRAWL_LOG_FIELDS]).alias("line"),
-    )
+    return heritrix_only(df).select(*_crawl_log_line())
 
 
 def mixed_stream_lines(df: DataFrame) -> DataFrame:
@@ -63,24 +55,7 @@ def mixed_stream_lines(df: DataFrame) -> DataFrame:
     (report.py:108-123): discovered-URL rows (parentUrl set) render one
     way, crawled rows (status_code set) another, everything else is an
     error row."""
-    has_parent = F.col("parentUrl").isNotNull() if "parentUrl" in df.columns else F.lit(False)
-    discovered = F.format_string(
-        "DISCOVERED %s via %s",
-        F.coalesce(F.col("url"), F.lit("-")),
-        F.coalesce(F.col("parentUrl") if "parentUrl" in df.columns else F.lit(None), F.lit("-")),
-    )
-    crawled = F.format_string(
-        "CRAWLED %s %s %s",
-        F.coalesce(F.col("timestamp"), F.lit("-")),
-        F.coalesce(F.col("status_code").cast("string"), F.lit("-")),
-        F.coalesce(F.col("url"), F.lit("-")),
-    )
-    return df.select(
-        F.when(has_parent, discovered)
-        .when(F.col("status_code").isNotNull(), crawled)
-        .otherwise(F.lit("ERROR: unrecognised record"))
-        .alias("line")
-    )
+    return df.select(_mixed_line("parentUrl" in df.columns))
 
 
 def summarise_hosts(df: DataFrame) -> DataFrame:
@@ -93,26 +68,10 @@ def summarise_hosts(df: DataFrame) -> DataFrame:
     engine defines it as min_by over the stable ``seq`` column when one
     exists (kafka offset / row id), else falls back to Spark's first()
     (documented divergence, SURVEY §7.7)."""
-    via = F.coalesce(
-        F.col("parentUrl") if "parentUrl" in df.columns else F.lit(None),
-        F.col("via"),
-        F.lit("-"),
+    keep, cols, aggs = _host_summary(
+        "parentUrl" in df.columns, "seq" in df.columns
     )
-    d = (
-        df.withColumn("via_u", via)
-        .filter(F.col("url").startswith("http"))  # P-7 report.py:149-151
-        .withColumn("hostname", C.host_of("url"))
-        .withColumn("via_host", C.host_of("via_u"))
-    )
-    cross = F.when(F.col("via_host") != F.col("hostname"), F.col("via_u"))
-    if "seq" in df.columns:
-        first_via = F.min_by(cross, F.when(cross.isNotNull(), F.col("seq")))
-    else:
-        first_via = F.first(cross, ignorenulls=True)
-    return d.groupBy("hostname").agg(
-        F.count("*").alias("tot"),
-        first_via.alias("first_cross_via"),
-    )
+    return df.filter(keep).select(*cols).groupBy("hostname").agg(*aggs)
 
 
 def solr_documents(df: DataFrame) -> DataFrame:
@@ -125,10 +84,86 @@ def solr_documents(df: DataFrame) -> DataFrame:
     - crawler = Heritrix|WebRender by thread presence (F-10, :214-219)
     - extra_info dropped (report.py:212)
     """
+    return df.select(*_solr_document())
+
+
+# -- projections, built once per process -------------------------------------
+#
+# Each builder names its input columns and takes only the structural flags
+# its projection branches on, so the Columns it returns bind to whichever
+# frame they are applied to, in any session. Building them costs dozens of
+# py4j round trips; the report command used to pay that on every call.
+
+
+@functools.cache
+def _crawl_log_line() -> tuple[Column, Column]:
+    fields = [
+        F.coalesce(F.col(c).cast("string"), F.lit("-"))
+        for c in _CRAWL_LOG_FIELDS
+    ]
+    fmt = " ".join(["%s"] * len(_CRAWL_LOG_FIELDS))
+    url = fields[_CRAWL_LOG_FIELDS.index("url")]
+    return url.alias("url"), F.format_string(fmt, *fields).alias("line")
+
+
+@functools.cache
+def _mixed_line(has_parent: bool) -> Column:
+    parent = F.col("parentUrl") if has_parent else F.lit(None)
+    is_discovered = parent.isNotNull() if has_parent else F.lit(False)
+    discovered = F.format_string(
+        "DISCOVERED %s via %s",
+        F.coalesce(F.col("url"), F.lit("-")),
+        F.coalesce(parent, F.lit("-")),
+    )
+    crawled = F.format_string(
+        "CRAWLED %s %s %s",
+        F.coalesce(F.col("timestamp"), F.lit("-")),
+        F.coalesce(F.col("status_code").cast("string"), F.lit("-")),
+        F.coalesce(F.col("url"), F.lit("-")),
+    )
+    return (
+        F.when(is_discovered, discovered)
+        .when(F.col("status_code").isNotNull(), crawled)
+        .otherwise(F.lit("ERROR: unrecognised record"))
+        .alias("line")
+    )
+
+
+@functools.cache
+def _host_summary(
+    has_parent: bool, has_seq: bool
+) -> tuple[Column, tuple[Column, ...], tuple[Column, Column]]:
+    """(row filter, pre-aggregation columns, aggregates) of summarise_hosts."""
+    via = F.coalesce(
+        F.col("parentUrl") if has_parent else F.lit(None),
+        F.col("via"),
+        F.lit("-"),
+    )
+    cols = (
+        via.alias("via_u"),
+        C.host_of("url").alias("hostname"),
+        C.host_of(via).alias("via_host"),
+    )
+    if has_seq:
+        cols += (F.col("seq"),)
+    cross = F.when(F.col("via_host") != F.col("hostname"), F.col("via_u"))
+    if has_seq:
+        first_via = F.min_by(cross, F.when(cross.isNotNull(), F.col("seq")))
+    else:
+        first_via = F.first(cross, ignorenulls=True)
+    return (
+        F.col("url").startswith("http"),  # P-7 report.py:149-151
+        cols,
+        (F.count("*").alias("tot"), first_via.alias("first_cross_via")),
+    )
+
+
+@functools.cache
+def _solr_document() -> tuple[Column, ...]:
     start_time, duration = C.split_start_time_plus_duration(
         F.col("start_time_plus_duration")
     )
-    return df.select(
+    return (
         C.doc_id(F.col("timestamp"), F.col("url")).alias("id"),
         F.col("timestamp").alias("log_timestamp"),
         F.col("url"),
@@ -153,9 +188,3 @@ def solr_documents(df: DataFrame) -> DataFrame:
         F.col("warc_filename"),
         F.col("warc_offset"),
     )
-
-
-def raw_stream(df: DataFrame, limit: int | None = None) -> DataFrame:
-    """-F raw + P-11 row limit (report.py:27-37; uniform limit semantics
-    per the off-by-one note in SURVEY §5.2)."""
-    return df.limit(limit) if limit is not None else df

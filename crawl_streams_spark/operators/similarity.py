@@ -1103,6 +1103,10 @@ def semantic_dedup_pairs(
     produced exactly once while the work spreads over k·S keys. The
     right-side shuffle grows ×S, so size S to the parallelism actually
     needed (callers with k cells want S ≈ 2·cores/k; 1 = off)."""
+    if pair_salt < 1:
+        # 0 or fewer salts would replicate the right side to no key and
+        # silently return no pairs
+        raise ValueError(f"pair_salt must be >= 1, got {pair_salt}")
     assigned = assign_cells(corpus, centroids, id_col, vec_col)
     a = assigned.select(
         F.col("__id").alias("vec_a"),

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 # Runtime-settable SQL confs applied to *any* session (including one created
@@ -79,8 +80,13 @@ def get_spark(
         # outputPartitioning) then change shape mid-session (the
         # pq_codes_fixed_book snapshot flake, r14). Default-parameter
         # callers get the existing session as-is; explicit
-        # shuffle_partitions still applies, as requested.
-        existing = SparkSession.getActiveSession()
+        # shuffle_partitions still applies, as requested. active() falls
+        # back from the thread-local active session to the process's
+        # default one, so a session another thread created counts too.
+        try:
+            existing = SparkSession.active()
+        except PySparkRuntimeError:
+            existing = None
         if existing is not None:
             return apply_runtime_confs(existing)
         shuffle_partitions = os.cpu_count() or 8 if cpus == "*" else int(cpus)

@@ -11,8 +11,16 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
+from ..functions import crawl as C
 from ..schemas import CRAWL_FEED_SCHEMA, CRAWL_LOG_SCHEMA
+
+#: the union schema plus the corrupt-record column (a copy: StructType.add
+#: mutates in place, and CRAWL_LOG_SCHEMA is shared)
+_CRAWL_LOG_READ_SCHEMA = StructType(
+    list(CRAWL_LOG_SCHEMA.fields) + [StructField("corrupt_record", StringType())]
+)
 
 
 def read_crawl_feed(spark: SparkSession, path: str) -> DataFrame:
@@ -28,28 +36,27 @@ def read_crawl_log(spark: SparkSession, path: str) -> DataFrame:
 
     Malformed lines never fail the job — the reference catch-and-logs
     every parse error (analysis.py:140-141, streamer.py:161-162); here
-    PERMISSIVE mode routes them to ``corrupt_record`` (count it for the
-    A-9-style error metric, filter it out for analysis)."""
-    # copy — StructType.add mutates in place, and CRAWL_LOG_SCHEMA is shared
-    from pyspark.sql.types import StringType, StructField, StructType
+    PERMISSIVE mode routes them to ``corrupt_record``. Filter on it for
+    analysis. For the A-9-style error metric, count it NEXT TO another
+    column — Spark refuses a raw-JSON query whose only referenced column
+    is the corrupt-record column::
 
-    schema = StructType(
-        list(CRAWL_LOG_SCHEMA.fields) + [StructField("corrupt_record", StringType())]
-    )
+        df.agg(F.count("corrupt_record"), F.count("timestamp")).first()[0]
+    """
     df = (
-        spark.read.schema(schema)
+        spark.read.schema(_CRAWL_LOG_READ_SCHEMA)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "corrupt_record")
         .json(path)
     )
-    return df.withColumn("is_heritrix", F.col("thread").isNotNull())
+    return df.withColumn("is_heritrix", C.is_heritrix())
 
 
 def stream_crawl_log(spark: SparkSession, path: str) -> DataFrame:
     """Streaming flavor of read_crawl_log over a directory — the
     no-broker test harness for every streaming operator (SURVEY §7.5)."""
     df = spark.readStream.schema(CRAWL_LOG_SCHEMA).json(path)
-    return df.withColumn("is_heritrix", F.col("thread").isNotNull())
+    return df.withColumn("is_heritrix", C.is_heritrix())
 
 
 def read_uri_list(spark: SparkSession, path: str) -> DataFrame:

@@ -57,14 +57,6 @@ def host_stats_stream(events: DataFrame, window: str = "1 hour") -> DataFrame:
     )
 
 
-def status_code_stream(events: DataFrame, window: str = "1 hour") -> DataFrame:
-    """A-6 as a windowed histogram."""
-    return events.groupBy(
-        F.window("event_ts", window).alias("win"),
-        C.status_str(F.col("status_code")).alias("status"),
-    ).agg(F.count("*").alias("n"))
-
-
 def atomic_snapshot_writer(path: str, top_n: int = 500):
     """SNK-3 foreachBatch sink: serialize the batch's aggregate rows to
     JSON, write to a temp file in the same directory, os.replace into

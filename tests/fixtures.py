@@ -97,3 +97,72 @@ def write_crawl_feed(tmpdir: str) -> str:
         for t in CRAWL_FEED:
             f.write(json.dumps(t) + "\n")
     return path
+
+
+def write_crawl_log_sample(tmpdir: str, n: int = 240, n_malformed: int = 6,
+                           seed: int = 7) -> str:
+    """Deterministic synthetic crawl log in the reference sample's shape
+    (FIXTURES.md §1): both record variants, negative Heritrix status codes,
+    same-host and cross-host referrers, non-http URL schemes, every
+    annotation class, NULL fields, two event dates, and ``n_malformed``
+    lines cut mid-record. Used where the reference sample is absent."""
+    import datetime as dt
+    import random
+
+    rng = random.Random(seed)
+    hosts = [f"h{i}.example.org" for i in range(12)] + ["WWW.Example.COM:80"]
+    t0 = dt.datetime(2021, 1, 16, 23, 58, 0)
+    bad_at = set(rng.sample(range(n + n_malformed), n_malformed))
+    lines = []
+    for i in range(n + n_malformed):
+        ts = (t0 + dt.timedelta(milliseconds=997 * i)).strftime(
+            "%Y-%m-%dT%H:%M:%S.%f")[:-3] + "Z"
+        host = rng.choice(hosts)
+        kind = rng.random()
+        if kind < 0.06:
+            url = f"dns:{host}"
+        elif kind < 0.1:
+            url = f"screenshot:https://{host}/p{i}"
+        else:
+            scheme = rng.choice(["https", "https", "http"])
+            q = rng.choice(["", "?b=2&a=1", "?z=0"])
+            frag = rng.choice(["", "#top"])
+            url = f"{scheme}://{host}/p{i % 17}{q}{frag}"
+        status = rng.choice([200, 200, 301, 404, -5003, -5003, -6])
+        annots = ",".join(rng.sample(
+            ["ip:10.0.0.%d" % (i % 250), "launchTimestamp:2021011617040912",
+             "dol:3", "duplicate:digest", "3t", "Q:serverMaxSuccessKb",
+             "WebRenderStatus:200", "reset Quotas"], rng.randrange(0, 4)))
+        rec = {"url": url, "timestamp": ts, "status_code": status,
+               "annotations": annots}
+        if status > 0:
+            rec["content_digest"] = "sha1:%032d" % (i % 40)
+            rec["content_length"] = 100 + i
+            rec["start_time_plus_duration"] = "20210116170409885+%d" % i
+        if rng.random() < 0.9:
+            via_host = rng.choice([host, rng.choice(hosts)])
+            rec.update({
+                "hop_path": rng.choice(["", "L", "LLE", "LRX", "P"]),
+                "via": rng.choice([f"https://{via_host}/", None]),
+                "seed": f"tid:{i % 5}:https://{via_host}/",
+                "thread": rng.randrange(1, 400),
+                "crawl_name": "frequent-npld",
+                "mimetype": rng.choice(["text/html", "image/png", None]),
+                "size": rec.get("content_length"),
+                "extra_info": {"scopeDecision": "ACCEPT"},
+            })
+        else:
+            rec.update({
+                "http_method": "GET", "wire_bytes": 500 + i,
+                "content_type": rng.choice(["text/html", None]),
+                "warc_type": "response", "warc_filename": f"BL-{i}.warc.gz",
+                "warc_offset": 1000 * i,
+            })
+        line = json.dumps(rec)
+        if i in bad_at:
+            line = line[: len(line) // 3]
+        lines.append(line)
+    path = os.path.join(tmpdir, "crawl_log_sample.jsonl")
+    with open(path, "w") as f:
+        f.write("\n".join(lines) + "\n")
+    return path

@@ -27,13 +27,14 @@ def test_clustered_write_layout(spark, sf_dir, tmp_path):
         "event_id", "event_type", "user_id"
     )
     n = ev.count()
-    clustered_write(
+    written = clustered_write(
         ev,
         out,
         partition_by=["event_type"],
         cluster_by=["user_id"],
         max_records_per_file=500,
     )
+    assert written == n  # counted by the write itself
     # directory partitioning for pruning
     dirs = [d for d in os.listdir(out) if d.startswith("event_type=")]
     types = [r["event_type"] for r in ev.select("event_type").distinct().collect()]

@@ -42,3 +42,28 @@ def test_two_components_do_not_merge(spark):
     )
     got = {r["key"]: r["cluster"] for r in D.cluster_duplicates(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 100: 100, 101: 100, 102: 100}
+
+
+def test_fractional_keys_use_join_fallback(spark):
+    # the checksum casts labels to decimal(38,0), which rounds 0.00..0.32
+    # to 0: a label moving from 0.01 to 0.00 left the checksum unchanged,
+    # the loop stopped after one round and 28 of these 33 nodes kept a
+    # local-min label. Fractional keys must take the join-based check.
+    keys = [round(i / 100, 2) for i in range(33)]
+    pairs = spark.createDataFrame(
+        [(keys[i], keys[i + 1]) for i in range(32)], ["key_a", "key_b"]
+    )
+    got = {r["key"]: r["cluster"] for r in D.cluster_duplicates(pairs).collect()}
+    assert got == {k: 0.0 for k in keys}
+
+
+def test_fractional_decimal_keys_use_join_fallback(spark):
+    from decimal import Decimal
+
+    keys = [Decimal(i).scaleb(-2) for i in range(33)]
+    pairs = spark.createDataFrame(
+        [(keys[i], keys[i + 1]) for i in range(32)],
+        "key_a decimal(4,2), key_b decimal(4,2)",
+    )
+    got = {r["key"]: r["cluster"] for r in D.cluster_duplicates(pairs).collect()}
+    assert got == {k: Decimal("0.00") for k in keys}

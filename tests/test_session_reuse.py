@@ -31,3 +31,27 @@ def test_explicit_shuffle_partitions_still_apply(spark):
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_default_get_spark_from_another_thread_keeps_partitions(spark):
+    """The active session is thread-local: a thread that never set one
+    must still get the existing (default) session untouched, not a
+    re-tuned one."""
+    import threading
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    seen = {}
+
+    def embedded():
+        s = get_spark("embedded-thread")
+        seen["partitions"] = s.conf.get("spark.sql.shuffle.partitions")
+
+    spark.conf.set("spark.sql.shuffle.partitions", "97")
+    try:
+        t = threading.Thread(target=embedded)
+        t.start()
+        t.join()
+        assert seen["partitions"] == "97"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "97"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)

@@ -4,6 +4,7 @@ baseline, plus the dedup operator family's behavioral contracts."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from crawl_streams_spark.operators import dedup as D
 from crawl_streams_spark.operators import similarity as S
@@ -681,6 +682,16 @@ def test_semantic_dedup_pairs_within_cells_only(spark, sf_dir):
         assert assigned[r["vec_a"]] == r["cell"] == assigned[r["vec_b"]]
         assert r["cos_sim"] >= 0.3
         assert r["vec_a"] < r["vec_b"]
+
+
+@pytest.mark.parametrize("salt", [0, -2])
+def test_semantic_dedup_pairs_rejects_nonpositive_salt(spark, salt):
+    """Fewer than one salt would replicate the right side to no key and
+    return an empty pair set; the operator refuses it instead."""
+    emb = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    cents = spark.createDataFrame([(0, [1.0, 0.0])], "cell int, centroid array<double>")
+    with pytest.raises(ValueError, match="pair_salt"):
+        S.semantic_dedup_pairs(emb, cents, pair_salt=salt)
 
 
 def test_semantic_dedup_argmin_never_groups_on_vector(spark, sf_dir):
