@@ -7,48 +7,45 @@ of every operator family (the external correctness harness verifies a
 bounded prefix of the registry; round 1 proved only the first 50 entries
 get driver verdicts, leaving 43 queries with local-only evidence).
 
-Ordering policy (round 13 — planner-generated via
-``python -m scripts.plan_rotation 13`` at the 191-query registry
-(184 + the seven new oracle gates below), then seven filler slots
-donated from the END to round-13 additions, per the planner's own
-donation rule):
+Ordering policy (round 15 — planner-generated via
+``python -m scripts.plan_rotation 15`` at the 191-query registry, with
+CORRECTNESS_r14.json the newest checked-in verdict file; round 14 closed
+without a rotation, so the r13 window was verified twice and the
+planner now reports 42 MUST entries, 6 of them deferred):
 
-- Slots 1-9 (MUST): the nine r8-verdict queries the planner, the r12
-  judge, and the rotation guard's projection all pre-enumerated —
-  they age past the 4-round freshness bound at r13 if left
-  un-windowed (``returnflag_status_chisq`` … ``windowed_count``; the
-  r12 judge's full 184/184 harness run re-oracled all 9 green, so
-  this is pure rotation execution — VERDICT r12 item 1).
-- Slots 10-26: one representative per family the MUST set misses,
+- Slots 1-36 (MUST): the planner's kept MUST list, oldest verdict
+  first. The eight r9-verdict queries lead — at round 14 they were
+  already 5 rounds old, past the 4-round freshness bound
+  (``knn_ivf_pq_fixed`` … ``purchase_attribution``; the first seven
+  are the fillers the round-13 window donated to its new gates). Then
+  28 r10-verdict queries.
+- Slots 37-44: one representative per family the MUST set misses,
   oldest verdicts first. ``parts_bought_together`` /
   ``orders_validation_report`` are sole members of their families and
-  recur every round by construction.
-- Slots 27-33: round-13 NEW gates, in-window at birth. First the last
-  conformance-only §2 crawl ops (VERDICT r12 item 2):
-  ``referrer_host_histogram`` (A-5 self-exclusion),
-  ``screenshot_strip_ring`` (P-8 + A-10 strip/ring over the real
-  operator), ``solr_etl_projection`` (the F-6/F-8/F-9/F-10 crawl-db
-  ETL projection as one DuckDB-replayable gate). Then the previously
-  pytest-only TRANSACTIONAL family (q_tx): ``tx_dml_merge_state``
-  (row-level DML + the r13 four-clause MergeBuilder),
-  ``tx_cdf_change_counts`` (Change Data Feed accounting),
-  ``tx_time_travel_counts`` (snapshot isolation + RESTORE),
-  ``tx_generated_dml_state`` (generated columns incl. the partition
-  column, recompute under DML). Registry 191 ≤ 196.
-- Slots 34-50: oldest-verdict fillers (r9); seven filler slots
-  donated to the new gates above (the planner's last three —
-  ``media_png_features``, ``media_wav_features``,
-  ``null_coalesce_projection`` — plus ``lang_source_rollup``,
-  ``media_jpeg_features``, ``media_png16_features``,
-  ``knn_ivf_pq_fixed``).
+  recur every round by construction; ``tx_cdf_change_counts`` is both
+  the q_tx representative and a round-13 gate.
+- Slots 45-50: the other six round-13 gates
+  (tests/test_registry_order.py::test_round_changed_queries_in_window),
+  on slots donated from the END of the kept MUST list, per the
+  planner's donation rule (the window has no filler slots left). The
+  donated entries are r10-verdict queries: ``price_quantile_sketch``,
+  ``pricing_summary``, ``promo_revenue_share``, ``recent_window_topk``,
+  ``regional_revenue``, ``sessionized_set_ops``.
+- Over capacity: the planner defers six more r10-verdict MUST entries
+  (``status_code_histogram``, ``token_array_ops``, ``top_tokens``,
+  ``user_interarrival_stats``, ``wayback_timestamps``,
+  ``windowed_funnel_levels``). With the six donated ones, these 12
+  queries are the rotation guard's non-failing round-15 projection:
+  the debt the skipped round-14 rotation left. They stay un-windowed
+  this round, so they strand once a round-15 verdict file lands; the
+  next rotation must window them first.
 - The rotation debt guard (tests/test_registry_order.py::
   test_no_query_strands_beyond_k_rounds) asserts zero strands at the
-  max CHECKED-IN CORRECTNESS round (the enforceable end-of-round
-  invariant — VERDICT r5 item 1) and reports the next-round projection
-  as a non-failing warning; the bound constant lives in
+  max CHECKED-IN CORRECTNESS round and reports the next-round
+  projection as a non-failing warning; the bound constant lives in
   scripts/plan_rotation.py (``FRESHNESS_BOUND = 4``).
 
-Retired windows (rounds 1-9) are recorded in ROUNDLOG.md and git history.
+Retired windows (rounds 1-14) are recorded in ROUNDLOG.md and git history.
 """
 
 from .registry import REGISTRY, Query, query  # noqa: F401
@@ -87,61 +84,60 @@ DRIVER_WINDOW = 50
 #: Names pinned to the front of the registry, in order. Everything not
 #: listed keeps its registration order after these.
 PRIORITY: tuple[str, ...] = (
-    # -- MUST: r8-verdict queries aging past the bound (planner sect. 1)
-    "returnflag_status_chisq",  # q_sql_extra, r8
-    "rollup_order_priority",  # q_tpch, r8
-    "source_lang_entropy",  # q_corpus, r8
-    "temperature_mixed_counts",  # q_pipeline, r8
-    "top_orders_per_customer",  # q_tpch, r8
-    "url_host_extraction",  # q_crawl, r8
-    "user_time_to_convert",  # q_behavior, r8
-    "variant_typed_extraction",  # q_events, r8
-    "windowed_count",  # q_events, r8
+    # -- MUST: verdicts aging past the bound, oldest first (planner sect. 1)
+    "knn_ivf_pq_fixed",  # q_similarity, r9
+    "lang_source_rollup",  # q_text, r9
+    "media_jpeg_features",  # q_crawl, r9
+    "media_png16_features",  # q_crawl, r9
+    "media_png_features",  # q_crawl, r9
+    "media_wav_features",  # q_crawl, r9
+    "null_coalesce_projection",  # q_events, r9
+    "purchase_attribution",  # q_behavior, r9
+    "benchmark_contamination",  # q_pipeline, r10
+    "bigram_pmi_collocations",  # q_corpus, r10
+    "bloom_part_membership",  # q_sketch, r10
+    "bpe_learned_merges",  # q_pipeline, r10
+    "cheapest_supplier_per_part",  # q_sql_extra, r10
+    "cluster_golden_records",  # q_dedup, r10
+    "conditional_aggregation",  # q_sql_extra, r10
+    "cube_lineitem_status",  # q_sql_extra, r10
+    "daily_cohort_retention",  # q_behavior, r10
+    "date_function_suite",  # q_sql_extra, r10
+    "doc_pii_scan",  # q_pipeline, r10
+    "doc_token_stats",  # q_text, r10
+    "embedding_near_dup",  # q_similarity, r10
+    "event_type_stats",  # q_events, r10
+    "graph_unit_propagation",  # q_graph, r10
+    "idle_rich_customers",  # q_joins_advanced, r10
+    "important_part_value",  # q_joins_advanced, r10
+    "knn_opq_fixed",  # q_similarity, r10
+    "large_volume_customers",  # q_tpch3, r10
+    "last_shipper_per_order",  # q_tpch2, r10
+    "late_shipment_priority",  # q_tpch2, r10
+    "lineitem_price_asof_scd2",  # q_diff, r10
+    "media_gif_features",  # q_crawl, r10
+    "mimetype_fallback_chain",  # q_schedule, r10
+    "mmh3_partition_keys",  # q_schedule, r10
+    "order_value_running",  # q_tpch, r10
+    "orders_in_top_segments",  # q_sql_extra, r10
+    "pack_sequences",  # q_pipeline, r10
     # -- family reps, oldest verdicts first (planner section 2) ----------
-    "dedup_minhash_lsh_pairs",  # q_dedup, r9
-    "orders_scd2_incremental",  # q_diff, r9
-    "host_graph_kcore",  # q_graph, r9
-    "active_sessions_at_purchase",  # q_interval, r11
-    "clicks_before_purchase",  # q_joins_advanced, r9
-    "parts_bought_together",  # q_market, r12 — sole member, recurs
-    "unpivot_lineitem_metrics",  # q_pivot, r11
-    "launch_ts_and_source_tags",  # q_schedule, r9
-    "user_sessions",  # q_sessions, r10
-    "embedding_density_dedup",  # q_similarity, r9
-    "cms_token_estimates",  # q_sketch, r9
-    "dup_token_spans",  # q_spans, r10
-    "annotation_regex_classes",  # q_text, r9
-    "hourly_value_anomalies",  # q_timeseries, r10
-    "disjunctive_part_revenue",  # q_tpch2, r9
-    "discount_revenue_forecast",  # q_tpch3, r9
-    "orders_validation_report",  # q_validate, r12 — sole member, recurs
-    # -- round-13 NEW gates, in-window at birth (VERDICT r12 item 2) -----
-    "referrer_host_histogram",  # q_crawl, NEW — A-5 self-exclusion
-    "screenshot_strip_ring",  # q_crawl, NEW — P-8 + A-10 over the operator
-    "solr_etl_projection",  # q_crawl, NEW — F-6/F-8/F-9/F-10 ETL in one gate
-    # -- round-13 NEW tx-family gates (previously pytest-only surface) ---
-    "tx_dml_merge_state",  # q_tx, NEW — DML + 4-clause MergeBuilder
-    "tx_cdf_change_counts",  # q_tx, NEW — Change Data Feed accounting
-    "tx_time_travel_counts",  # q_tx, NEW — snapshots + RESTORE
-    "tx_generated_dml_state",  # q_tx, NEW — generated columns + DML
-    # -- oldest-verdict fillers (planner section 3): all r9-verdict ------
-    "balanced_shard_stats",  # q_pipeline, r9
-    "customer_order_left_join",  # q_tpch, r9
-    "customers_with_open_orders",  # q_tpch, r9
-    "customers_without_orders",  # q_tpch, r9
-    "dedup_ngram_jaccard",  # q_dedup, r9
-    "doc_fingerprints",  # q_text, r9
-    "doc_lang_id",  # q_text, r9
-    "doc_lm_perplexity",  # q_corpus, r9
-    "doc_quality",  # q_text, r9
-    "dsir_bigram_selected_docs",  # q_pipeline, r9
-    "dsir_selected_docs",  # q_pipeline, r9
-    "embedding_norms",  # q_similarity, r9
-    "equi_depth_price_bins",  # q_sql_extra, r9
-    "event_type_dist_users",  # q_events, r9
-    "formatted_log_lines",  # q_events, r9
-    "heavy_hitter_keys",  # q_sketch, r9
-    "hist_median_by_type",  # q_events, r9
+    "concurrent_sessions",  # q_interval, r12
+    "parts_bought_together",  # q_market, r14 — sole member, recurs
+    "status_pivot",  # q_pivot, r12
+    "approx_distinct_users",  # q_sessions, r11
+    "dup_span_doc_stats",  # q_spans, r11
+    "decayed_event_counts",  # q_timeseries, r11
+    "tx_cdf_change_counts",  # q_tx, r14 — also a round-13 gate
+    "orders_validation_report",  # q_validate, r14 — sole member, recurs
+    # -- round-13 gates on slots donated from the END of the kept MUST
+    # list (price_quantile_sketch … sessionized_set_ops, all r10) -------
+    "referrer_host_histogram",  # q_crawl, r14 — A-5 self-exclusion
+    "screenshot_strip_ring",  # q_crawl, r14 — P-8 + A-10 over the operator
+    "solr_etl_projection",  # q_crawl, r14 — F-6/F-8/F-9/F-10 ETL in one gate
+    "tx_dml_merge_state",  # q_tx, r14 — DML + 4-clause MergeBuilder
+    "tx_time_travel_counts",  # q_tx, r14 — snapshots + RESTORE
+    "tx_generated_dml_state",  # q_tx, r14 — generated columns + DML
 )
 
 

@@ -694,6 +694,29 @@ def test_semantic_dedup_pairs_rejects_nonpositive_salt(spark, salt):
         S.semantic_dedup_pairs(emb, cents, pair_salt=salt)
 
 
+def test_semantic_dedup_pairs_plan_and_rows_salt_invariant(spark, sf_dir):
+    """The registry query salts by the session's defaultParallelism on
+    purpose, so its pinned plan snapshot must not depend on the salt:
+    the salt changes only the join keys and the right side's explode,
+    not the operator counts. The pair set is the same for any salt."""
+    from crawl_streams_spark.functions.vectors import to_double_array
+    from crawl_streams_spark.plans.audit import plan_metrics
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("cell"),
+        to_double_array("embedding").alias("centroid"),
+    )
+    one, eight = (
+        S.semantic_dedup_pairs(emb, cents, threshold=0.35, pair_salt=s)
+        for s in (1, 8)
+    )
+    assert plan_metrics(one) == plan_metrics(eight)
+    rows_one = sorted(one.collect())
+    assert rows_one
+    assert rows_one == sorted(eight.collect())
+
+
 def test_semantic_dedup_argmin_never_groups_on_vector(spark, sf_dir):
     """The assignment argmin must aggregate slim (id, struct) rows — the
     64-double vector array must never be a grouping or partitioning KEY

@@ -831,10 +831,16 @@ def test_tx_fold_writer_runs_maintenance(spark, tmp_path):
     src = str(tmp_path / "mw_src")
     os.makedirs(src)
     schema = "content_digest string, url string, hits bigint"
+    # one file per directory: a multi-slice one-row frame also writes a
+    # schema-only empty part file beside the data file, with the same
+    # mtime, so the stream ran 8 micro-batches in an arbitrary
+    # empty/non-empty order; that pushed the fold past the v10 log
+    # checkpoint, and clean_log(0 s) then dropped every COMPACT commit
+    # below it in some orders
     for b in range(4):
         spark.createDataFrame(
             [(f"sha1:{b}", f"http://u/{b}", b)], schema
-        ).write.mode("append").parquet(os.path.join(src, f"f{b}"))
+        ).coalesce(1).write.mode("append").parquet(os.path.join(src, f"f{b}"))
     table = ensure_tx_snapshot(
         spark, str(tmp_path / "mw_tbl"), schema, "content_digest",
         n_buckets=2,
