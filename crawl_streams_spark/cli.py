@@ -310,12 +310,13 @@ def cmd_dedup(args) -> int:
     # output mirrors the index's idempotence: one partition per batch,
     # dynamically overwritten, so a retried run rewrites its own rows
     # instead of appending a second copy
-    admitted.withColumn("batch_id", F.lit(batch_id)).write.partitionBy(
-        "batch_id"
-    ).option("partitionOverwriteMode", "dynamic").mode("overwrite").parquet(
-        args.output
-    )
-    n = spark.read.parquet(args.output).count()
+    out = admitted.withColumn("batch_id", F.lit(batch_id))
+    out.write.partitionBy("batch_id").option(
+        "partitionOverwriteMode", "dynamic"
+    ).mode("overwrite").parquet(args.output)
+    # the written frame's schema, not inference: a run that admits no
+    # rows may leave no data file to infer from
+    n = spark.read.schema(out.schema).parquet(args.output).count()
     print(f"admitted rows appended to {args.output} (total now {n})")
     return 0
 
@@ -339,6 +340,7 @@ def cmd_select(args) -> int:
 
     Output is written split-partitioned when a split is requested."""
     import pyspark.sql.functions as F
+    from pyspark.sql import Observation
 
     from .operators.pipeline import (
         cap_source_share,
@@ -387,16 +389,23 @@ def cmd_select(args) -> int:
                 "split", split_assign(args.key_col, train, val)
             )
         writer_partition = "split"
-    w = df.write.mode("overwrite")
+    # count during the write: re-reading the output would need a data
+    # file to infer its schema from, and a selection of no rows has none
+    splits = ("train", "val", "test") if writer_partition else ()
+    written = Observation()
+    w = df.observe(
+        written,
+        F.count(F.lit(1)).alias("n"),
+        *[F.count_if(F.col("split") == s).alias(s) for s in splits],
+    ).write.mode("overwrite")
     if writer_partition:
         w = w.partitionBy(writer_partition)
     w.parquet(args.output)
-    out = spark.read.parquet(args.output)
-    n1 = out.count()
-    print(f"selected {n1}/{n0} rows -> {args.output}")
-    if writer_partition:
-        for r in out.groupBy("split").count().collect():
-            print(f"  {r['split']}: {r['count']}")
+    counts = written.get
+    print(f"selected {counts['n']}/{n0} rows -> {args.output}")
+    for s in splits:
+        if counts[s]:
+            print(f"  {s}: {counts[s]}")
     return 0
 
 

@@ -25,11 +25,6 @@ from pyspark.sql import Column
 from pyspark.sql.types import StringType
 
 
-def md5_hex(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.md5(c.cast("string"))
-
-
 def md5_long(col: Column | str, seed: int = 0) -> Column:
     """Cross-engine-stable 60-bit hash: first 15 hex digits of
     md5(seed || ':' || value) parsed base-16.
@@ -103,14 +98,6 @@ def minhash_from_hashes(base31: Column, num_hashes: int) -> Column:
             for a, b in minhash_ab(num_hashes)
         ]
     )
-
-
-def minhash_signature(shingles: Column, num_hashes: int) -> Column:
-    """Convenience inline form of shingle_hashes31 → minhash_from_hashes.
-    Prefer the staged two-column form in real pipelines (see
-    plans/q_dedup.py) — inlined, each of the ``num_hashes`` minima carries
-    its own copy of the md5 subtree and HOFs get no codegen CSE."""
-    return minhash_from_hashes(shingle_hashes31(shingles), num_hashes)
 
 
 def band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:

@@ -79,16 +79,6 @@ def punct_ratio(text: Column | str) -> Column:
     return F.when(n > 0, punct.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords of the given language."""
-    toks = tokens(text)
-    sw = F.array([F.lit(w) for w in STOPWORDS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
-    return F.when(F.size(toks) > 0, hits.cast("double") / F.size(toks).cast("double")).otherwise(
-        F.lit(0.0)
-    )
-
-
 def stopword_hits(toks: Column, lang: str) -> Column:
     sw = F.array([F.lit(w) for w in STOPWORDS[lang]])
     return F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
@@ -120,17 +110,6 @@ def _with_tokens(text: Column | str, body) -> Column:
     expression referencing the token array k times would re-split the text
     k times — per-language scoring pays 5× without this."""
     return F.element_at(F.transform(F.array(tokens(text)), body), 1)
-
-
-def lang_scores(text: Column | str) -> Column:
-    """Map lang → stopword hit count, the language-ID evidence vector."""
-    return _with_tokens(
-        text,
-        lambda toks: F.map_from_arrays(
-            F.array([F.lit(code) for code in STOPWORDS]),
-            F.array([stopword_hits(toks, code) for code in STOPWORDS]),
-        ),
-    )
 
 
 def lang_id(text: Column | str) -> Column:

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 
 from ..functions import hashing as H
 from ..functions import text as T
-from .iterate import check_converged, pin, unpin
+from .iterate import fixed_point, pin, unpin
 
 
 def _hash_fns(hash_impl: str):
@@ -374,10 +374,17 @@ def cluster_duplicates(
     key == cluster as the representative to keep.
 
     Each iteration does a neighbor-min propagation AND a pointer-jump
-    (relabel through the label's own label), so the min label spreads
-    exponentially — `max_iter` 20 covers any realistic component diameter.
-    Iterations stop early at a fixed point; lineage is cut per round with
-    localCheckpoint so plans don't grow with iterations."""
+    (relabel through the label's own label). Along a path whose keys
+    fall toward the minimum the label spreads exponentially; a minimum
+    key hanging off a path whose keys lead elsewhere still moves one hop
+    per round, so such a component needs about its diameter in rounds
+    and raises at `max_iter` instead of truncating.
+    The loop is ``iterate.fixed_point``: every round carries each key's
+    previous label beside the new one, so "did any label move" is a
+    per-row flag read from the pinned round without a shuffle, and it is
+    exact for every key type (integral, fractional, decimal, string).
+    Superseded rounds and the edge pin are released before returning;
+    only the returned frame holds storage."""
     edges = (
         pairs.select(F.col(key_a).alias("a"), F.col(key_b).alias("b"))
         .union(pairs.select(F.col(key_b).alias("a"), F.col(key_a).alias("b")))
@@ -395,15 +402,21 @@ def cluster_duplicates(
         .agg(F.least(F.min("b"), F.first("a")).alias("cluster"))
         .select(F.col("a").alias("key"), "cluster")
     )
+
     def _step(cur: DataFrame) -> DataFrame:
-        # 1) propagate: node takes min(own label, neighbors' labels)
+        cur = cur.select("key", "cluster", F.col("cluster").alias("own"))
+        # 1) propagate: node takes min(own label, neighbors' labels); the
+        # key set is constant (cur is unioned back in), so `own` — the
+        # previous label — is never NULL
         neigh = edges.join(cur, edges.b == cur.key).select(
-            F.col("a").alias("key"), F.col("cluster")
+            F.col("a").alias("key"),
+            F.col("cluster"),
+            F.lit(None).cast(cur.schema["own"].dataType).alias("own"),
         )
         prop = (
             cur.union(neigh)
             .groupBy("key")
-            .agg(F.min("cluster").alias("cluster"))
+            .agg(F.min("cluster").alias("cluster"), F.min("own").alias("own"))
         )
         # 2) pointer-jump: relabel through the cluster's own label. The
         # lookup side is RENAMED, not alias()-ed: the alias self-join's
@@ -415,83 +428,29 @@ def cluster_duplicates(
         j = prop.select(
             F.col("key").alias("__jkey"), F.col("cluster").alias("__jcluster")
         )
+        jumped = F.least(
+            F.col("cluster"), F.coalesce(F.col("__jcluster"), F.col("cluster"))
+        )
         return prop.join(
             j, F.col("cluster") == F.col("__jkey"), "left"
         ).select(
             F.col("key"),
-            F.least(
-                F.col("cluster"),
-                F.coalesce(F.col("__jcluster"), F.col("cluster")),
-            ).alias("cluster"),
+            jumped.alias("cluster"),
+            (jumped != F.col("own")).alias("moved"),
         )
 
-    def _moved(new: DataFrame, old: DataFrame) -> bool:
-        return (
-            new.alias("n")
-            .join(old.alias("o"), "key")
-            .filter(F.col("n.cluster") != F.col("o.cluster"))
-            .limit(1)
-            .count()
-            > 0
+    try:
+        labels = fixed_point(
+            labels,
+            _step,
+            "cluster_duplicates",
+            max_iter,
+            checkpoint_dir,
+            on_nonconverge,
         )
-
-    # Convergence check (r14, guide §2.4 "remove shuffles outright"):
-    # labels are elementwise NON-INCREASING round over round (propagation
-    # takes min(own, neighbors'), the pointer jump takes a further min)
-    # and the key set is constant (prop unions the current labels back
-    # in), so for integral keys "no label moved" ⇔ "count and checksum
-    # unchanged" — one scan-aggregate over the just-pinned frame instead
-    # of a key-shuffle join of two label frames per round. decimal(38,0)
-    # keeps the sum exact (bigint keys × any realistic row count stay
-    # under 10^38); a NULL sum on a nonempty frame (decimal overflow)
-    # falls back to the join so equality is never vacuous. Only integral
-    # keys (and scale-0 decimals) qualify: the cast rounds fractional
-    # keys, so a label that moved between keys rounding alike (0.01 →
-    # 0.00) leaves the checksum unchanged and the loop stops early.
-    from pyspark.sql.types import DecimalType, IntegralType
-
-    key_type = labels.schema["cluster"].dataType
-    numeric_key = isinstance(key_type, IntegralType) or (
-        isinstance(key_type, DecimalType) and key_type.scale == 0
-    )
-
-    def _sig(df: DataFrame):
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("cluster").cast("decimal(38,0)")).alias("s"),
-        ).collect()[0]
-        if row["n"] > 0 and row["s"] is None:
-            return None  # overflow: signature unusable this round
-        return (row["n"], row["s"])
-
-    def _advanced(new: DataFrame, old: DataFrame, new_sig, old_sig) -> bool:
-        if new_sig is not None and old_sig is not None:
-            return new_sig != old_sig
-        return _moved(new, old)
-
-    changed = False
-    old_sig = _sig(labels) if numeric_key else None
-    for _ in range(max_iter):
-        new_labels = pin(_step(labels), checkpoint_dir)  # cut lineage
-        new_sig = _sig(new_labels) if numeric_key else None
-        changed = _advanced(new_labels, labels, new_sig, old_sig)
-        labels, old_sig = new_labels, new_sig
-        if not changed:
-            break
-    # labels still moving at the cap = components whose min label has not
-    # finished spreading — truncated clusters must not escape silently.
-    # The final permitted iteration may itself have reached the fixed
-    # point: one extra propagation distinguishes that from truncation
-    # (ADVICE r4, mirroring k_core's re-check).
-    if changed:
-        final = _step(labels)
-        changed = _advanced(
-            final, labels, _sig(final) if numeric_key else None, old_sig
-        )
-    check_converged(
-        not changed, "cluster_duplicates", max_iter, on_nonconverge
-    )
-    return labels
+    finally:
+        unpin(edges)
+    return labels.select("key", "cluster")
 
 
 def minhash_dedup_transitive(

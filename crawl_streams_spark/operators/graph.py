@@ -6,7 +6,9 @@ statistics and iterative influence propagation over the same edges).
 Iterative algorithms are DataFrame loops in the style of
 operators/dedup.py::cluster_duplicates and similarity.py::kmeans_train:
 one join + one aggregation per round, lineage cut with localCheckpoint,
-no RDDs, no driver-side collects.
+no RDDs, no driver-side collects. Loops that run to a fixed point
+(``bfs_distances``) go through ``iterate.fixed_point``, which releases
+each superseded round and reads convergence from a per-row flag.
 
 Scale (100 TB of edges):
 - degree stats are one partial-agg shuffle per side (out by src, in by
@@ -31,7 +33,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from .iterate import check_converged, pin
+from .iterate import check_converged, fixed_point, pin, unpin
 
 __all__ = [
     "nodes_of",
@@ -275,7 +277,10 @@ def k_core(
     partitioning-independent. O(peel-depth) rounds, each one
     partial-agg'd degree shuffle + two anti-joins; lineage cut per
     round via ``iterate.pin`` (``checkpoint_dir`` switches to reliable
-    checkpoints for preemptible clusters). A graph needing more than
+    checkpoints for preemptible clusters), and each superseded round
+    released once the next is pinned. The state shrinks instead of
+    changing row by row, so peeling keeps its own loop rather than
+    ``iterate.fixed_point``'s per-row flag. A graph needing more than
     ``max_iter`` peel rounds is reported through ``on_nonconverge``
     (default raise) instead of silently returning sub-k nodes (ADVICE
     r3). Returns (node, core_degree) — the node's degree WITHIN the
@@ -290,35 +295,37 @@ def k_core(
         checkpoint_dir,
     )
 
-    def _has_weak(rel: DataFrame) -> bool:
+    def _weak(rel: DataFrame) -> DataFrame:
         deg = (
             rel.select(F.explode(F.array("a", "b")).alias("v"))
             .groupBy("v")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        return deg.filter(F.col("d") < k).limit(1).count() > 0
+        return deg.filter(F.col("d") < k).select("v")
 
     converged = False
     for _ in range(max_iter):
-        deg = (
-            und.select(F.explode(F.array("a", "b")).alias("v"))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        weak = deg.filter(F.col("d") < k).select("v")
+        weak = _weak(und)
         if weak.limit(1).count() == 0:
             converged = True
             break
-        und = pin(
+        nxt = pin(
             und.join(weak.withColumnRenamed("v", "a"), "a", "left_anti")
             .join(weak.withColumnRenamed("v", "b"), "b", "left_anti")
             .select("a", "b"),
             checkpoint_dir,
         )
+        # every und is this loop's own pin, and nxt no longer reads it
+        unpin(und)
+        und = nxt
     # the cap may have landed exactly on the fixed point: one last check
     if not converged:
-        converged = not _has_weak(und)
-    check_converged(converged, "k_core", max_iter, on_nonconverge)
+        converged = _weak(und).limit(1).count() == 0
+    try:
+        check_converged(converged, "k_core", max_iter, on_nonconverge)
+    except (RuntimeError, ValueError):  # what check_converged raises
+        unpin(und)
+        raise
     return (
         und.select(F.explode(F.array("a", "b")).alias("node"))
         .groupBy("node")
@@ -345,7 +352,12 @@ def bfs_distances(
     ``sources`` is a one-column (node) relation (distance 0). Returns
     (node, dist) for reachable nodes only. O(diameter) rounds, one
     edge-keyed join + partial-agg'd min per round; the edge relation is
-    materialized once (localCheckpoint)."""
+    materialized once (localCheckpoint). The loop is
+    ``iterate.fixed_point``: each round carries a node's previous
+    distance as ``min(own)`` beside ``min(dist)``, so a node that
+    appeared or got closer is flagged in the aggregate itself and the
+    convergence check needs no join. Superseded rounds and the edge pin
+    are released before returning; a pinned ``sources`` is left alone."""
     e = edges.select("src", "dst")
     if not directed:
         e = e.unionByName(
@@ -358,43 +370,36 @@ def bfs_distances(
         F.col(sources.columns[0]).alias("node"),
         F.lit(0).cast("bigint").alias("dist"),
     ).distinct()
+
     def _relax(cur: DataFrame) -> DataFrame:
+        cur = cur.select("node", "dist", F.col("dist").alias("own"))
         step = cur.join(e, e["src"] == cur["node"]).select(
             F.col("dst").alias("node"),
             (F.col("dist") + 1).alias("dist"),
+            F.lit(None).cast("bigint").alias("own"),
         )
         return (
             cur.unionByName(step)
             .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
-
-    def _improved(new: DataFrame, old: DataFrame) -> bool:
-        # any node that appeared or got closer
-        return (
-            new.alias("n")
-            .join(old.alias("o"), "node", "left")
-            .filter(
-                F.col("o.dist").isNull()
-                | (F.col("n.dist") < F.col("o.dist"))
+            .agg(F.min("dist").alias("dist"), F.min("own").alias("own"))
+            # any node that appeared or got closer
+            .select(
+                "node",
+                "dist",
+                (F.col("own").isNull() | (F.col("dist") < F.col("own"))).alias(
+                    "moved"
+                ),
             )
-            .limit(1)
-            .count()
-            > 0
         )
 
-    changed = False
-    for _ in range(max_iter):
-        new_dist = pin(_relax(dist), checkpoint_dir)
-        changed = _improved(new_dist, dist)
-        dist = new_dist
-        if not changed:
-            break
     # a graph with diameter > max_iter would silently omit far nodes
-    # (ADVICE r3); but the final permitted iteration may itself have
-    # REACHED the fixed point — one extra relaxation distinguishes
-    # "landed exactly on the answer" from true truncation (ADVICE r4)
-    if changed:
-        changed = _improved(_relax(dist), dist)
-    check_converged(not changed, "bfs_distances", max_iter, on_nonconverge)
-    return dist
+    # (ADVICE r3); fixed_point reports it, after one extra round that
+    # tells "landed exactly on the answer" from truncation (ADVICE r4)
+    try:
+        dist = fixed_point(
+            dist, _relax, "bfs_distances", max_iter, checkpoint_dir,
+            on_nonconverge,
+        )
+    finally:
+        unpin(e)
+    return dist.select("node", "dist")

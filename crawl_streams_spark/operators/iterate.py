@@ -1,6 +1,6 @@
 """Shared plumbing for iterative DataFrame kernels (connected components,
-PageRank, k-core peeling, BFS, BPE): lineage pinning and fixed-point
-convergence reporting.
+PageRank, k-core peeling, BFS, BPE): lineage pinning, release, the
+fixed-point loop and convergence reporting.
 
 No counterpart in the reference (its kernels are single-process loops);
 this is the Spark-side discipline that makes O(iters) DataFrame loops
@@ -11,10 +11,11 @@ silent truncation at the iteration cap.
 from __future__ import annotations
 
 import warnings
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
-__all__ = ["pin", "unpin", "check_converged"]
+__all__ = ["pin", "unpin", "check_converged", "fixed_point"]
 
 
 def unpin(df: DataFrame) -> None:
@@ -158,3 +159,51 @@ def check_converged(
         raise RuntimeError(msg)
     if on_nonconverge == "warn":
         warnings.warn(msg, RuntimeWarning, stacklevel=3)
+
+
+def fixed_point(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    kernel: str,
+    max_iter: int,
+    checkpoint_dir: str | None = None,
+    on_nonconverge: str = "raise",
+) -> DataFrame:
+    """Iterate ``state = step(state)`` to its fixed point, at most
+    ``max_iter`` rounds; returns the last state (its ``moved`` column
+    included).
+
+    ``step`` returns the next state with a boolean ``moved`` column that
+    is true on every row that changed this round. Kernels compute it
+    inside the aggregate the step already runs (the previous value rides
+    along as ``min(own)``), so the per-round check is one action over the
+    just-pinned frame with no shuffle: ``filter("moved").isEmpty()``.
+
+    Each round is pinned, and the round it supersedes is released at
+    once. Only pins made here are released: ``unpin`` walks every leaf,
+    so releasing the initial ``state`` would also free the caller's pins
+    beneath it (a kernel's edge relation, a pinned input).
+
+    Rows still moving at the cap may mean truncation, or the last
+    permitted round may itself have landed on the fixed point: one extra
+    unpinned round tells the two apart before ``check_converged``
+    reports."""
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1; got {max_iter!r}")
+    moved, owned = True, None
+    for _ in range(max_iter):
+        nxt = pin(step(state), checkpoint_dir)
+        moved = not nxt.filter("moved").isEmpty()
+        if owned is not None:
+            unpin(owned)
+        state = owned = nxt
+        if not moved:
+            break
+    if moved:
+        moved = not step(state).filter("moved").isEmpty()
+    try:
+        check_converged(not moved, kernel, max_iter, on_nonconverge)
+    except (RuntimeError, ValueError):  # what check_converged raises
+        unpin(owned)
+        raise
+    return state

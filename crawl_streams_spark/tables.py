@@ -55,20 +55,6 @@ FACT_TABLES = {"documents": "doc_id", "embeddings": "vec_id"}
 #: verdict is cached: file layout under a path doesn't change mid-session.
 _NEEDS_REBALANCE: dict[tuple[str, int], int | None] = {}
 
-#: Default spread-target multiplier for loads that pass an explicit
-#: ``spread_factor``: the guarded rebalance then targets
-#: min(defaultParallelism, factor × scan splits) instead of the raw core
-#: count (VERDICT r13 item 5: the unconditional defaultParallelism
-#: target over-partitioned single-split inputs badly enough to make 32
-#: cores 2.3× slower than 8 on dedup_exact). A GLOBAL bound was
-#: A/B-measured (r14) and REJECTED: compute-heavy consumers of the same
-#: tables want the full width — media_flac_features 0.90 → 1.82 s and
-#: top_unshipped_orders 0.71 → 1.41 s at 32 cores under a 4×splits
-#: bound — so the bound is a per-load dial for pipelines whose per-row
-#: work is light, not a loader-wide rule. Env-tunable for cluster
-#: profiles; at any real scale the guard never fires.
-SPREAD_FACTOR = int(os.environ.get("SPARK_GRAFT_SPREAD_FACTOR", "4"))
-
 #: path → inferred parquet schema. Every bare ``spark.read.parquet(path)``
 #: fires a one-task footer-read job (~0.2-0.3 s of driver+task latency)
 #: to infer the schema; a query plan that is rebuilt per run (the bench
@@ -115,7 +101,12 @@ def _ensure_min_parallelism(
     one-split input spread 32 ways pays 32 partitions of shuffle/
     partial-agg/scheduling overhead for sub-MB of data; pipelines with
     HEAVY per-row work (codec decode, signature math) keep the full
-    width — see the SPREAD_FACTOR note for the measured split."""
+    width. A GLOBAL bound was A/B-measured (r14) and REJECTED:
+    compute-heavy consumers of the same tables want the full width —
+    media_flac_features 0.90 → 1.82 s and top_unshipped_orders
+    0.71 → 1.41 s at 32 cores under a 4×splits bound — so the bound is
+    a per-load argument for pipelines whose per-row work is light, not
+    a loader-wide rule. At any real scale the guard never fires."""
     cores = spark.sparkContext.defaultParallelism
     key = (path, cores)
     if key not in _NEEDS_REBALANCE:
@@ -180,13 +171,3 @@ def load_table(
             df, spark, path, spread_on, factor=spread_factor
         )
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:
-    """Register all tables as temp views (for spark.sql-built queries)."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name + suffix)

@@ -45,8 +45,10 @@ def _metrics_table() -> str:
         snaps = json.load(f)
     lines = [
         "## All-query plan metrics (pinned at sf0.001)\n",
-        "From `tests/plan_snapshots.json` — regenerate with "
-        "`python -m scripts.update_plan_snapshots`. Columns: shuffle "
+        "From `tests/plan_snapshots.json`, which "
+        "`python -m scripts.update_plan_snapshots` regenerates; this "
+        "table is rewritten from it by `python scripts/gen_plans.py`. "
+        "Columns: shuffle "
         "exchanges / broadcast joins / sort-merge joins / Python stages / "
         "bounded top-k / unpartitioned windows (data-sized global windows "
         "are always 0 — they would serialize the input through one task; "

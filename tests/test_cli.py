@@ -12,11 +12,13 @@ from crawl_streams_spark.cli import main
 
 from .fixtures import crawl_log_path, write_crawl_feed
 
-pytestmark = pytest.mark.skipif(
+#: only the cases that read the reference crawl-log sample need it
+needs_sample = pytest.mark.skipif(
     crawl_log_path() is None, reason="reference sample not available"
 )
 
 
+@needs_sample
 def test_report_crawl_log(capsys, spark):
     assert (
         main(
@@ -37,12 +39,14 @@ def test_report_crawl_log(capsys, spark):
     assert all("https://" in line or "http://" in line for line in out)
 
 
+@needs_sample
 def test_report_summarise(capsys, spark):
     assert main(["report", "--input", crawl_log_path(), "-S", "-M", "3"]) == 0
     out = capsys.readouterr().out
     assert "hostname" in out and "tot" in out
 
 
+@needs_sample
 def test_streamer_range(capsys, spark):
     assert (
         main(
@@ -99,6 +103,7 @@ def test_launcher_dry_run(capsys, spark, tmp_path):
         assert doc["parentUrlMetadata"]["heritableData"]["launchTimestamp"] == "20200101090000"
 
 
+@needs_sample
 def test_analyse_once(capsys, spark, tmp_path):
     import shutil
 
@@ -166,6 +171,7 @@ def test_rollup_update(capsys, spark, sf_dir, tmp_path):
     assert second == 2 * first
 
 
+@needs_sample
 def test_analyse_rollup_mode(capsys, spark, tmp_path):
     import shutil
 
@@ -218,6 +224,21 @@ def test_dedup_cli_near_mode(capsys, spark, sf_dir, tmp_path):
     # replay of the same input: identical re-admission, overwritten in place
     assert main(args) == 0
     assert spark.read.parquet(out).count() == first
+
+
+def test_dedup_cli_empty_batch(capsys, spark, tmp_path):
+    """A batch with no rows admits none: the total is counted with the
+    written frame's schema, since the output holds no data file to infer
+    one from."""
+    docs = str(tmp_path / "empty_docs")
+    spark.createDataFrame(
+        [], "doc_id long, text string, lang string, source string, n_chars long"
+    ).write.parquet(docs)
+    out = str(tmp_path / "empty_out")
+    args = ["dedup", "--input", docs, "--index", str(tmp_path / "idx"),
+            "--output", out]
+    assert main(args) == 0
+    assert "(total now 0)" in capsys.readouterr().out
 
 
 def test_select_pipeline_end_to_end(capsys, spark, tmp_path):
@@ -284,6 +305,24 @@ def test_select_pipeline_with_temperature_mix(capsys, spark, tmp_path):
     share = counts["dominant"] / (counts["dominant"] + counts["minor"])
     assert share < 0.85
     assert counts["minor"] > 150  # minor source preserved near target
+
+
+def test_select_empty_input_with_split(capsys, spark, tmp_path):
+    """A selection of no rows leaves the split-partitioned output with no
+    data file; the counts come from the write itself, not a re-read."""
+    corpus = str(tmp_path / "empty_corpus")
+    spark.createDataFrame(
+        [], "doc_id long, source string, n_chars long"
+    ).write.parquet(corpus)
+    out = str(tmp_path / "empty_sel")
+    rc = main([
+        "select", "--input", corpus, "--output", out,
+        "--cap-source", "0.30", "--split", "0.8,0.1",
+    ])
+    assert rc == 0
+    printed = capsys.readouterr().out
+    assert f"selected 0/0 rows -> {out}" in printed
+    assert "train:" not in printed
 
 
 def test_table_cli_lifecycle(capsys, spark, tmp_path):

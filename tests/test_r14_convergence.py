@@ -1,8 +1,11 @@
-"""cluster_duplicates' r14 convergence check: for numeric keys the
-per-round "did any label move" verdict comes from a (count, checksum)
-scan-aggregate instead of a key-shuffle join — valid because labels are
-elementwise non-increasing and the key set is constant. String keys must
-keep the join-based check (no checksum exists)."""
+"""cluster_duplicates' convergence check on the key types that broke an
+earlier design. Round 14 read "did any label move" from a (count,
+checksum) scan-aggregate for numeric keys and kept a key-shuffle join for
+the rest; the checksum rounded fractional keys and stopped the loop early.
+Both checks are gone: every key type now stops on ``iterate.fixed_point``'s
+per-row ``moved`` flag. These cases stay as regression tests of that era,
+unchanged: the comments in their bodies name the mechanisms they were
+written against (the checksum, the join fallback)."""
 
 from __future__ import annotations
 
