@@ -1,23 +1,25 @@
-"""Multimodal column plumbing (north-star extension): image/audio/video as
-opaque ``binary`` payloads + typed metadata, with decode / feature-extract
-/ resize / frame-sample stages as Arrow-batched pandas functions over
-``mapInPandas``.
+"""Multimodal column plumbing: image and audio as opaque ``binary``
+payloads plus typed metadata, decoded by Arrow-batched pandas functions
+over ``mapInPandas``.
 
-The container has no codec LIBRARIES, so the generic decode kernels are
-STUBS behind ``_HAVE_CODECS`` — deterministic fakes with the real
-Spark-side contract (schema, batch iteration, partitioning) — plus one
-honest ``NotImplementedError`` path. But TEN formats decode for REAL
-with numpy/stdlib alone: RIFF WAV in seven encodings — PCM16/PCM8/PCM24/float32, G.711
-µ-law/A-law, IMA ADPCM (0x11), MS ADPCM (0x02) — all via ``decode_wav``;
-subset FLAC (``decode_flac_features``, operators/flac.py: CRC-verified
-frames, Rice residuals, fixed predictors); binary PPM
-(``decode_ppm``/``resize_ppm``); baseline JPEG (``decode_jpeg_features``
-via the pure-NumPy ITU-T T.81 decoder in operators/jpeg.py: Huffman,
-dequant, vectorized IDCT, chroma upsampling, restart markers); PNG, GIF,
-BMP and QOI (operators/png.py, gif.py, bmp.py, qoi.py). Only genuinely library-bound
-codecs (MP3, H.264) remain gated. Everything around the stubs (schemas,
-Arrow batch shapes, the mapInPandas plumbing, partition sizing) is real
-and tested (tests/test_multimodal.py, tests/test_jpeg.py, test_flac.py).
+Every format here decodes for REAL with numpy and the stdlib alone: RIFF
+WAV in seven encodings — PCM16/PCM8/PCM24/float32, G.711 µ-law/A-law, IMA
+ADPCM (0x11), MS ADPCM (0x02) — all via ``decode_wav``; subset FLAC
+(``decode_flac_features``, operators/flac.py: CRC-verified frames, Rice
+residuals, fixed predictors); binary PPM (``decode_ppm``/``resize_ppm``);
+baseline JPEG (``decode_jpeg_features`` via the pure-NumPy ITU-T T.81
+decoder in operators/jpeg.py: Huffman, dequant, vectorized IDCT, chroma
+upsampling, restart markers); PNG, GIF, BMP, QOI and TIFF
+(operators/png.py, gif.py, bmp.py, qoi.py, tiff.py). Library-bound codecs
+(MP3, H.264) are out of scope.
+
+Every stage runs through ``_decode_stage``, which owns the per-row
+contract: output rows keep input order, a NULL payload gives all-NULL
+features plus ``"null payload"``, the codec's own error class gives
+all-NULL features plus its message, and any other exception fails the
+stage (tests/test_codec_totality.py holds each codec to its own error
+class). At 100 TB a decode stage must quarantine bad blobs, not die on
+them — but a bug must still fail loudly.
 
 Scale notes: media blobs dominate row width — keep
 ``spark.sql.files.maxPartitionBytes`` low enough that a partition of blobs
@@ -26,13 +28,10 @@ fits executor memory, and never groupBy a blob column (metadata keys only).
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     FloatType,
@@ -43,12 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-try:  # codecs are not installed in this environment — keep the gate honest
-    import PIL.Image  # noqa: F401
-
-    _HAVE_CODECS = True
-except Exception:  # pragma: no cover
-    _HAVE_CODECS = False
+from ..session import _ensure_worker_path
 
 #: A media row: opaque payload + typed metadata (FIXTURES-style contract).
 MEDIA_SCHEMA = StructType(
@@ -60,210 +54,62 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-DECODED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("media_type", StringType(), True),
-        StructField("n_bytes", IntegerType(), True),
-        StructField("payload_sha1", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("features", ArrayType(FloatType()), True),
-    ]
-)
 
-
-def documents_as_media(docs: DataFrame) -> DataFrame:
-    """Adapter: treat document text bytes as opaque payloads so the media
-    pipeline is exercisable on the driver tables."""
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.col("text").cast("binary").alias("payload"),
-        F.lit("image").alias("media_type"),
-        F.lit("image/x-fake").alias("mime"),
-    )
-
-
-def _fake_decode_impl():
-    """Factory for the deterministic decode stand-in (dimensions + an 8-dim
-    feature vector from the payload digest). A factory so the returned
-    closure cloudpickles by value into executor-side code."""
-    import hashlib as _hashlib
-
-    def fake_decode(payload: bytes) -> tuple[int, int, list[float]]:
-        digest = _hashlib.sha1(payload).digest()
-        width = 1 + digest[0] % 64
-        height = 1 + digest[1] % 64
-        feats = [round(b / 255.0, 6) for b in digest[2:10]]
-        return width, height, feats
-
-    return fake_decode
-
-
-def decode_media(df: DataFrame, batch_hint: int = 64) -> DataFrame:
-    """Decode stage over mapInPandas: Arrow batches in, Arrow batches out,
-    schema fixed by DECODED_SCHEMA. With codecs installed this is where
-    PIL/ffmpeg run; without, the deterministic fake keeps the distributed
-    plumbing (batching, schema, null payloads) fully testable."""
-
-    # capture as locals: closure variables pickle BY VALUE, so executors
-    # never need this package importable (module globals would be pickled
-    # as references to crawl_streams_spark.*)
-    have_codecs = _HAVE_CODECS
-    fake_decode = _fake_decode_impl()
-
-    def decode_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "media_type": pdf["media_type"],
-                "n_bytes": [],
-                "payload_sha1": [],
-                "width": [],
-                "height": [],
-                "features": [],
-            }
-            for payload in pdf["payload"]:
-                if payload is None:
-                    out["n_bytes"].append(None)
-                    out["payload_sha1"].append(None)
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["features"].append(None)
-                    continue
-                data = bytes(payload)
-                if have_codecs:  # pragma: no cover — no codecs in container
-                    raise NotImplementedError(
-                        "real codec decode not wired in this environment"
-                    )
-                w, h, feats = fake_decode(data)
-                out["n_bytes"].append(len(data))
-                out["payload_sha1"].append(hashlib.sha1(data).hexdigest())
-                out["width"].append(w)
-                out["height"].append(h)
-                out["features"].append(feats)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(decode_batches, schema=DECODED_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("resized_width", IntegerType(), True),
-        StructField("resized_height", IntegerType(), True),
-        StructField("scale", FloatType(), True),
-    ]
-)
-
-
-def resize_media(
-    decoded: DataFrame, max_side: int = 32
+def _decode_stage(
+    df: DataFrame,
+    schema: StructType,
+    decode: Callable[[bytes], tuple],
+    error: type[Exception],
 ) -> DataFrame:
-    """Resize stage (aspect-preserving fit to ``max_side``): with codecs
-    installed this re-encodes pixels; the stub computes the real geometry
-    from the decoded dimensions — the Spark-side contract (schema, batch
-    flow, null propagation) is identical either way."""
+    """The one per-row decode stage: ``media_id`` and ``payload`` in,
+    ``schema`` out (``media_id``, the features, then ``error``).
 
-    have_codecs = _HAVE_CODECS
+    ``decode(payload)`` returns the feature tuple. A NULL payload gives
+    all-NULL features and ``"null payload"``; ``error`` raised by
+    ``decode`` gives all-NULL features and ``str(e)``; any other
+    exception fails the stage. Rows stay in input order. The stage puts
+    the package root on the session's worker path first, so a codec the
+    worker imports is found on a session no engine loader has seen."""
+    _ensure_worker_path(df.sparkSession)
+    columns = schema.fieldNames()
+    blank = (None,) * (len(columns) - 2)
 
-    def resize_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
+    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
         import pandas as pd
 
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "width", "height", "resized_width", "resized_height", "scale")}
-            for mid, w, h in zip(pdf["media_id"], pdf["width"], pdf["height"]):
-                out["media_id"].append(mid)
-                if w is None or h is None or pd.isna(w) or pd.isna(h):
-                    for k in ("width", "height", "resized_width", "resized_height", "scale"):
-                        out[k].append(None)
-                    continue
-                if have_codecs:  # pragma: no cover
-                    raise NotImplementedError("real resize not wired here")
-                w, h = int(w), int(h)
-                scale = min(max_side / w, max_side / h, 1.0)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["resized_width"].append(max(1, round(w * scale)))
-                out["resized_height"].append(max(1, round(h * scale)))
-                out["scale"].append(round(scale, 6))
-            yield pd.DataFrame(out)
-
-    return decoded.select("media_id", "width", "height").mapInPandas(
-        resize_batches, schema=RESIZED_SCHEMA
-    )
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_index", IntegerType(), False),
-        StructField("frame_ts_ms", LongType(), False),
-        StructField("frame_sha1", StringType(), True),
-    ]
-)
-
-
-def sample_frames(
-    media: DataFrame, fps: float = 1.0, duration_s: int = 4
-) -> DataFrame:
-    """Frame-sampling stage — the 1→N row-expanding mapInPandas shape a
-    video pipeline needs (each payload yields ``fps·duration`` frame rows).
-    The stub derives deterministic per-frame digests from the payload; a
-    real decoder swaps in ffmpeg keyframe extraction with the same output
-    schema. Frame rows carry no payload by default — at 100 TB you join
-    frames back to blobs by media_id only where needed."""
-    n_frames = max(1, int(fps * duration_s))
-
-    have_codecs = _HAVE_CODECS
-
-    def frame_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import hashlib
-        import pandas as pd
-
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "frame_index", "frame_ts_ms", "frame_sha1")}
+        for pdf in it:
+            rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 if payload is None:
+                    rows.append((mid, *blank, "null payload"))
                     continue
-                if have_codecs:  # pragma: no cover
-                    raise NotImplementedError("real frame extraction not wired here")
-                base = hashlib.sha1(bytes(payload))
-                for i in range(n_frames):
-                    fh = base.copy()
-                    fh.update(i.to_bytes(4, "little"))
-                    out["media_id"].append(mid)
-                    out["frame_index"].append(i)
-                    out["frame_ts_ms"].append(int(i * 1000 / fps))
-                    out["frame_sha1"].append(fh.hexdigest())
-            yield pd.DataFrame(out)
+                try:
+                    rows.append((mid, *decode(bytes(payload)), None))
+                except error as e:
+                    rows.append((mid, *blank, str(e)))
+            yield pd.DataFrame(rows, columns=columns)
 
-    return media.select("media_id", "payload").mapInPandas(
-        frame_batches, schema=FRAME_SCHEMA
-    )
+    return df.select("media_id", "payload").mapInPandas(batches, schema=schema)
 
 
-def media_summary(decoded: DataFrame) -> DataFrame:
-    """Post-decode rollup: per media_type byte/dimension stats — plain
-    grouped aggregation on the metadata (never on payloads)."""
-    return decoded.groupBy("media_type").agg(
-        F.count("*").alias("n_media"),
-        F.sum("n_bytes").alias("total_bytes"),
-        F.round(F.avg("width"), 4).alias("avg_width"),
-        F.round(F.avg("height"), 4).alias("avg_height"),
-        F.countDistinct("payload_sha1").alias("n_distinct_payloads"),
-    )
+def _raising(parse):
+    """Adapt a by-value ``(result, err)`` parser to ``_decode_stage``:
+    the returned closure gives ``result`` or raises ``ValueError(err)``,
+    and pickles by value like the parser it wraps."""
 
+    def strict(payload: bytes):
+        result, err = parse(payload)
+        if result is None:
+            raise ValueError(err)
+        return result
+
+    return strict
 
 # ---------------------------------------------------------------------------
-# REAL decoders. RIFF/PCM WAV and binary PPM (P6) are pure header+array
-# formats (numpy-only decode); baseline JPEG decodes through the pure-NumPy
-# T.81 implementation in operators/jpeg.py (decode_jpeg_features below).
-# Only MP3 / H.264 still need the gated codec path above.
+# Decoders. RIFF/PCM WAV and binary PPM (P6) are pure header+array formats
+# parsed by by-value closures below; the other codecs are modules the worker
+# imports (operators/jpeg.py, png.py, gif.py, bmp.py, flac.py, qoi.py,
+# tiff.py).
 
 WAV_FEATURES_SCHEMA = StructType(
     [
@@ -818,30 +664,9 @@ def decode_wav(df: DataFrame) -> DataFrame:
     """REAL audio decode over mapInPandas: RIFF/PCM16 WAV payloads →
     (sample_rate, channels, duration, rms, peak, clip_fraction), malformed
     payloads reported per-row in ``error`` instead of failing the stage.
-    Same Arrow-batched contract as decode_media; numpy does the PCM math
-    per payload (vectorized within each blob)."""
-    decode = _wav_decode_impl()
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append((mid,) + (None,) * 8 + ("null payload",))
-                    continue
-                feats, err = decode(bytes(payload))
-                if feats is None:
-                    rows.append((mid,) + (None,) * 8 + (err,))
-                else:
-                    rows.append((mid,) + feats + (None,))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WAV_FEATURES_SCHEMA.fields]
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=WAV_FEATURES_SCHEMA
+    numpy does the PCM math per payload (vectorized within each blob)."""
+    return _decode_stage(
+        df, WAV_FEATURES_SCHEMA, _raising(_wav_decode_impl()), ValueError
     )
 
 
@@ -894,6 +719,8 @@ def _ppm_parse_impl():
             w, h, maxval = int(parts[1]), int(parts[2]), int(parts[3])
             if maxval != 255:
                 return None, f"unsupported maxval {maxval}"
+            if w < 1 or h < 1:
+                return None, f"bad dimensions {w}x{h}"
             header_len = len(payload[:64].rsplit(parts[4], 1)[0])
             px = np.frombuffer(payload, dtype=np.uint8, offset=header_len)
             if px.size < w * h * 3:
@@ -906,81 +733,42 @@ def _ppm_parse_impl():
 
 
 def decode_ppm(df: DataFrame) -> DataFrame:
-    """REAL image decode over mapInPandas: P6 PPM payloads → dimensions +
-    channel means + Rec.601 luminance; malformed payloads reported
-    per-row."""
-    parse = _ppm_parse_impl()
+    """REAL image decode over mapInPandas: P6 PPM payloads →
+    dimensions + channel means + Rec.601 luminance; malformed payloads
+    reported per-row."""
+    parse = _raising(_ppm_parse_impl())
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
+    def features(payload: bytes):
+        px = parse(payload)
+        means = px.reshape(-1, 3).mean(axis=0)
+        luma = float(0.299 * means[0] + 0.587 * means[1] + 0.114 * means[2])
+        return (
+            px.shape[1], px.shape[0],
+            round(float(means[0]), 4), round(float(means[1]), 4),
+            round(float(means[2]), 4), round(luma, 4),
+        )
 
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append((mid,) + (None,) * 6 + ("null payload",))
-                    continue
-                px, err = parse(bytes(payload))
-                if px is None:
-                    rows.append((mid,) + (None,) * 6 + (err,))
-                    continue
-                means = px.reshape(-1, 3).mean(axis=0)
-                luma = float(
-                    0.299 * means[0] + 0.587 * means[1] + 0.114 * means[2]
-                )
-                rows.append(
-                    (
-                        mid, px.shape[1], px.shape[0],
-                        round(float(means[0]), 4), round(float(means[1]), 4),
-                        round(float(means[2]), 4), round(luma, 4), None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PPM_DECODED_SCHEMA.fields]
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=PPM_DECODED_SCHEMA
-    )
+    return _decode_stage(df, PPM_DECODED_SCHEMA, features, ValueError)
 
 
 def resize_ppm(df: DataFrame, max_side: int = 32) -> DataFrame:
     """REAL pixel resize (nearest-neighbor via numpy index sampling),
     aspect-preserving fit to ``max_side``, re-encoded as P6 — an actual
-    image transformation, not geometry-only: the stub resize above stays
-    for codec formats, this one round-trips real pixels."""
-    parse = _ppm_parse_impl()
-    encode = ppm_bytes
+    image transformation that round-trips real pixels."""
+    import numpy as np
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
+    parse = _raising(_ppm_parse_impl())
 
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append((mid, None, None, None, "null payload"))
-                    continue
-                px, err = parse(bytes(payload))
-                if px is None:
-                    rows.append((mid, None, None, None, err))
-                    continue
-                h, w = px.shape[:2]
-                scale = min(max_side / w, max_side / h, 1.0)
-                rw, rh = max(1, round(w * scale)), max(1, round(h * scale))
-                yi = (np.arange(rh) * (h / rh)).astype(int)
-                xi = (np.arange(rw) * (w / rw)).astype(int)
-                resized = px[yi][:, xi]
-                rows.append((mid, rw, rh, encode(resized), None))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PPM_RESIZED_SCHEMA.fields]
-            )
+    def resized(payload: bytes):
+        px = parse(payload)
+        h, w = px.shape[:2]
+        scale = min(max_side / w, max_side / h, 1.0)
+        rw, rh = max(1, round(w * scale)), max(1, round(h * scale))
+        yi = (np.arange(rh) * (h / rh)).astype(int)
+        xi = (np.arange(rw) * (w / rw)).astype(int)
+        return rw, rh, ppm_bytes(px[yi][:, xi])
 
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=PPM_RESIZED_SCHEMA
-    )
+    return _decode_stage(df, PPM_RESIZED_SCHEMA, resized, ValueError)
 
 
 JPEG_DECODED_SCHEMA = StructType(
@@ -1005,71 +793,27 @@ def decode_jpeg_features(df: DataFrame) -> DataFrame:
     vectorized IDCT + chroma upsampling — no codec library). Grayscale
     payloads report their single channel in every mean column. Malformed
     or unsupported (progressive, 12-bit) payloads land in ``error``
-    per-row instead of failing the stage — at 100 TB a decode stage must
-    quarantine bad blobs, not die on them.
+    per-row instead of failing the stage.
 
     Unlike the header parsers above (closure-pickled by value), the full
-    codec is a module the WORKER imports: on a real cluster ship the
-    package with ``--py-files`` / a venv archive (standard deployment);
-    in local mode and shared-FS clusters the fallback below re-adds the
-    captured repo root to the worker's sys.path, because the driver's
-    own sys.path mutations do not propagate to Python workers."""
-    import os
+    codec is a module the WORKER imports; the session puts the package
+    root on the workers' path (``session._ensure_worker_path``)."""
+    from .jpeg import JpegError, decode_jpeg
 
-    pkg_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
+    def features(payload: bytes):
+        px = decode_jpeg(payload).astype("float64")
+        h, w, nc = px.shape
+        means = px.reshape(-1, nc).mean(axis=0)
+        if nc == 3:
+            r, g, b = (float(x) for x in means)
+            luma = 0.299 * r + 0.587 * g + 0.114 * b
+        else:
+            r = g = b = luma = float(means[0])
+        return (
+            w, h, nc, round(r, 4), round(g, 4), round(b, 4), round(luma, 4),
+        )
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import sys
-
-        import pandas as pd
-
-        try:
-            from crawl_streams_spark.operators.jpeg import (
-                JpegError,
-                decode_jpeg,
-            )
-        except ModuleNotFoundError:  # worker missing the package on path
-            if pkg_root not in sys.path:
-                sys.path.insert(0, pkg_root)
-            from crawl_streams_spark.operators.jpeg import (
-                JpegError,
-                decode_jpeg,
-            )
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append((mid,) + (None,) * 7 + ("null payload",))
-                    continue
-                try:
-                    px = decode_jpeg(bytes(payload)).astype("float64")
-                except JpegError as e:
-                    rows.append((mid,) + (None,) * 7 + (str(e),))
-                    continue
-                h, w, nc = px.shape
-                means = px.reshape(-1, nc).mean(axis=0)
-                if nc == 3:
-                    r, g, b = (float(x) for x in means)
-                    luma = 0.299 * r + 0.587 * g + 0.114 * b
-                else:
-                    r = g = b = luma = float(means[0])
-                rows.append(
-                    (
-                        mid, w, h, nc,
-                        round(r, 4), round(g, 4), round(b, 4),
-                        round(luma, 4), None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in JPEG_DECODED_SCHEMA.fields]
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=JPEG_DECODED_SCHEMA
-    )
+    return _decode_stage(df, JPEG_DECODED_SCHEMA, features, JpegError)
 
 
 PNG_DECODED_SCHEMA = StructType(
@@ -1098,62 +842,24 @@ def decode_png_features(df: DataFrame) -> DataFrame:
     SQL oracle that regenerates the pixels analytically matches the
     decode bit-for-bit with no rounding step (the round-free float
     discipline of record, ROUNDLOG r5 item 9). Malformed payloads land
-    in ``error`` per-row instead of failing the stage.
+    in ``error`` per-row instead of failing the stage."""
+    from .png import PngError, decode_png
 
-    Worker-side module import with the same ``--py-files`` contract as
-    decode_jpeg_features (captured-root sys.path fallback for local and
-    shared-FS mode)."""
-    import os
+    def features(payload: bytes):
+        px = decode_png(payload)
+        if px.ndim == 2:
+            h, w, nc = px.shape[0], px.shape[1], 1
+        else:
+            h, w, nc = px.shape
+        # depth follows the decoded dtype (uint16 since r9)
+        bd = 16 if px.dtype.itemsize == 2 else 8
+        total = int(px.sum(dtype="int64"))
+        return (
+            w, h, nc, bd, total, total / (h * w * nc),
+            int(px.min()), int(px.max()),
+        )
 
-    pkg_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import sys
-
-        import pandas as pd
-
-        try:
-            from crawl_streams_spark.operators.png import PngError, decode_png
-        except ModuleNotFoundError:  # worker missing the package on path
-            if pkg_root not in sys.path:
-                sys.path.insert(0, pkg_root)
-            from crawl_streams_spark.operators.png import PngError, decode_png
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append((mid,) + (None,) * 8 + ("null payload",))
-                    continue
-                try:
-                    px = decode_png(bytes(payload))
-                except PngError as e:
-                    rows.append((mid,) + (None,) * 8 + (str(e),))
-                    continue
-                if px.ndim == 2:
-                    h, w, nc = px.shape[0], px.shape[1], 1
-                else:
-                    h, w, nc = px.shape
-                # depth follows the decoded dtype (uint16 since r9)
-                bd = 16 if px.dtype.itemsize == 2 else 8
-                total = int(px.sum(dtype="int64"))
-                n = h * w * nc
-                rows.append(
-                    (
-                        mid, w, h, nc, bd,
-                        total, total / n,
-                        int(px.min()), int(px.max()), None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PNG_DECODED_SCHEMA.fields]
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=PNG_DECODED_SCHEMA
-    )
+    return _decode_stage(df, PNG_DECODED_SCHEMA, features, PngError)
 
 
 GIF_DECODED_SCHEMA = StructType(
@@ -1182,57 +888,20 @@ def decode_gif_features(df: DataFrame) -> DataFrame:
     sum over every channel sample and ``mean_sample`` its exact-int
     division — the same round-free discipline as decode_png_features, so
     an analytic SQL oracle matches bit-for-bit. Malformed payloads land
-    in ``error`` per-row instead of failing the stage.
+    in ``error`` per-row instead of failing the stage."""
+    from .gif import GifError, decode_gif
 
-    Worker-side module import with the same ``--py-files`` contract as
-    the JPEG/PNG stages (captured-root sys.path fallback)."""
-    import os
+    def features(payload: bytes):
+        px, palette = decode_gif(payload)
+        rgb = palette[px]  # uint8 fancy-index -> (h, w, 3) uint8
+        h, w, _ = rgb.shape
+        total = int(rgb.sum(dtype="int64"))
+        return (
+            w, h, 3, int(palette.shape[0]), total, total / (h * w * 3),
+            int(rgb.min()), int(rgb.max()),
+        )
 
-    pkg_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import sys
-
-        import pandas as pd
-
-        try:
-            from crawl_streams_spark.operators.gif import GifError, decode_gif
-        except ModuleNotFoundError:  # worker missing the package on path
-            if pkg_root not in sys.path:
-                sys.path.insert(0, pkg_root)
-            from crawl_streams_spark.operators.gif import GifError, decode_gif
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append((mid,) + (None,) * 8 + ("null payload",))
-                    continue
-                try:
-                    px, palette = decode_gif(bytes(payload))
-                except GifError as e:
-                    rows.append((mid,) + (None,) * 8 + (str(e),))
-                    continue
-                rgb = palette[px]  # uint8 fancy-index -> (h, w, 3) uint8
-                h, w, _ = rgb.shape
-                total = int(rgb.sum(dtype="int64"))
-                n = h * w * 3
-                rows.append(
-                    (
-                        mid, w, h, 3, int(palette.shape[0]),
-                        total, total / n,
-                        int(rgb.min()), int(rgb.max()), None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in GIF_DECODED_SCHEMA.fields]
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=GIF_DECODED_SCHEMA
-    )
+    return _decode_stage(df, GIF_DECODED_SCHEMA, features, GifError)
 
 
 BMP_DECODED_SCHEMA = StructType(
@@ -1260,60 +929,22 @@ def decode_bmp_features(df: DataFrame) -> DataFrame:
     over every channel sample, ``mean_sample`` its exact division —
     and an analytic SQL oracle matches bit-for-bit (the GIF/PNG
     discipline). Malformed payloads land in ``error`` per-row instead
-    of failing the stage.
+    of failing the stage."""
+    import struct
 
-    Worker-side module import with the same ``--py-files`` contract as
-    the JPEG/PNG/GIF stages (captured-root sys.path fallback)."""
-    import os
+    from .bmp import BmpError, decode_bmp
 
-    pkg_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
+    def features(payload: bytes):
+        rgb = decode_bmp(payload)
+        bits = struct.unpack_from("<H", payload, 28)[0]
+        h, w, _ = rgb.shape
+        total = int(rgb.sum(dtype="int64"))
+        return (
+            w, h, 3, int(bits), total, total / (h * w * 3),
+            int(rgb.min()), int(rgb.max()),
+        )
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import sys
-
-        import pandas as pd
-
-        try:
-            from crawl_streams_spark.operators.bmp import BmpError, decode_bmp
-        except ModuleNotFoundError:  # worker missing the package on path
-            if pkg_root not in sys.path:
-                sys.path.insert(0, pkg_root)
-            from crawl_streams_spark.operators.bmp import BmpError, decode_bmp
-
-        import struct as _struct
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append((mid,) + (None,) * 8 + ("null payload",))
-                    continue
-                raw = bytes(payload)
-                try:
-                    rgb = decode_bmp(raw)
-                except BmpError as e:
-                    rows.append((mid,) + (None,) * 8 + (str(e),))
-                    continue
-                bits = _struct.unpack_from("<H", raw, 28)[0]
-                h, w, _ = rgb.shape
-                total = int(rgb.sum(dtype="int64"))
-                n = h * w * 3
-                rows.append(
-                    (
-                        mid, w, h, 3, int(bits),
-                        total, total / n,
-                        int(rgb.min()), int(rgb.max()), None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in BMP_DECODED_SCHEMA.fields]
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=BMP_DECODED_SCHEMA
-    )
+    return _decode_stage(df, BMP_DECODED_SCHEMA, features, BmpError)
 
 
 def decode_flac_features(df: DataFrame) -> DataFrame:
@@ -1324,81 +955,35 @@ def decode_flac_features(df: DataFrame) -> DataFrame:
     samples — and therefore the exact-integer sufficient statistics —
     are reproducible by a SQL oracle that regenerates the sample stream
     (integer prefix sums for the order-1 fixture). Output schema is the
-    WAV feature schema; malformed payloads land in ``error`` per-row.
+    WAV feature schema; malformed payloads land in ``error`` per-row."""
+    import math
 
-    Worker-side module import with the same captured-root sys.path
-    fallback as the JPEG/PNG/GIF/BMP stages."""
-    import os
+    import numpy as np
 
-    pkg_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
+    from .flac import FlacError, decode_flac
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import math
-        import sys
+    def features(payload: bytes):
+        (rate, n_ch, bits, _total), x = decode_flac(payload)
+        n = int(x.size)
+        if n == 0:
+            return rate, n_ch, bits, 0, 0.0, 0.0, 0.0, 0.0
+        sumsq = int(np.sum(x * x))
+        peak_i = int(np.max(np.abs(x)))
+        clip_n = int(np.sum((x == 32767) | (x == -32768)))
+        return (
+            rate,
+            n_ch,
+            bits,
+            n,
+            # duration counts per-channel frames (stereo samples
+            # interleave into x)
+            1000.0 * (n / n_ch) / rate if rate else 0.0,
+            math.sqrt(sumsq / n) / 32768.0,
+            peak_i / 32768.0,
+            clip_n / n,
+        )
 
-        import numpy as np
-        import pandas as pd
-
-        try:
-            from crawl_streams_spark.operators.flac import (
-                FlacError,
-                decode_flac,
-            )
-        except ModuleNotFoundError:  # worker missing the package on path
-            if pkg_root not in sys.path:
-                sys.path.insert(0, pkg_root)
-            from crawl_streams_spark.operators.flac import (
-                FlacError,
-                decode_flac,
-            )
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append((mid,) + (None,) * 8 + ("null payload",))
-                    continue
-                try:
-                    (rate, n_ch, bits, _total), x = decode_flac(
-                        bytes(payload)
-                    )
-                except FlacError as e:
-                    rows.append((mid,) + (None,) * 8 + (str(e),))
-                    continue
-                n = int(x.size)
-                if n == 0:
-                    rows.append(
-                        (mid, rate, n_ch, bits, 0, 0.0, 0.0, 0.0, 0.0, None)
-                    )
-                    continue
-                sumsq = int(np.sum(x * x))
-                peak_i = int(np.max(np.abs(x)))
-                clip_n = int(np.sum((x == 32767) | (x == -32768)))
-                rows.append(
-                    (
-                        mid,
-                        rate,
-                        n_ch,
-                        bits,
-                        n,
-                        # duration counts per-channel frames (stereo
-                        # samples interleave into x)
-                        1000.0 * (n / n_ch) / rate if rate else 0.0,
-                        math.sqrt(sumsq / n) / 32768.0,
-                        peak_i / 32768.0,
-                        clip_n / n,
-                        None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WAV_FEATURES_SCHEMA.fields]
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=WAV_FEATURES_SCHEMA
-    )
+    return _decode_stage(df, WAV_FEATURES_SCHEMA, features, FlacError)
 
 
 def decode_qoi_features(df: DataFrame) -> DataFrame:
@@ -1407,56 +992,19 @@ def decode_qoi_features(df: DataFrame) -> DataFrame:
     statistics, BMP_DECODED_SCHEMA shape (``bit_depth`` carries the QOI
     channel count ×8). Lossless, so an analytic SQL oracle over the
     closed-form pattern matches bit-for-bit. Malformed payloads land in
-    ``error`` per-row.
+    ``error`` per-row."""
+    from .qoi import QoiError, decode_qoi
 
-    Worker-side module import with the same captured-root sys.path
-    fallback as the other codec stages."""
-    import os
+    def features(payload: bytes):
+        px = decode_qoi(payload)
+        h, w, ch = px.shape
+        total = int(px.sum(dtype="int64"))
+        return (
+            w, h, int(ch), int(ch) * 8, total, total / (h * w * ch),
+            int(px.min()), int(px.max()),
+        )
 
-    pkg_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import sys
-
-        import pandas as pd
-
-        try:
-            from crawl_streams_spark.operators.qoi import QoiError, decode_qoi
-        except ModuleNotFoundError:  # worker missing the package on path
-            if pkg_root not in sys.path:
-                sys.path.insert(0, pkg_root)
-            from crawl_streams_spark.operators.qoi import QoiError, decode_qoi
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append((mid,) + (None,) * 8 + ("null payload",))
-                    continue
-                try:
-                    px = decode_qoi(bytes(payload))
-                except QoiError as e:
-                    rows.append((mid,) + (None,) * 8 + (str(e),))
-                    continue
-                h, w, ch = px.shape
-                total = int(px.sum(dtype="int64"))
-                n = h * w * ch
-                rows.append(
-                    (
-                        mid, w, h, int(ch), int(ch) * 8,
-                        total, total / n,
-                        int(px.min()), int(px.max()), None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in BMP_DECODED_SCHEMA.fields]
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=BMP_DECODED_SCHEMA
-    )
+    return _decode_stage(df, BMP_DECODED_SCHEMA, features, QoiError)
 
 
 TIFF_DECODED_SCHEMA = StructType(
@@ -1485,60 +1033,16 @@ def decode_tiff_features(df: DataFrame) -> DataFrame:
     every channel sample, ``mean_sample`` its exact division — and an
     analytic SQL oracle matches bit-for-bit (the GIF/PNG/BMP
     discipline). Malformed payloads land in ``error`` per-row instead
-    of failing the stage.
+    of failing the stage."""
+    from .tiff import TiffError, decode_tiff
 
-    Worker-side module import with the same ``--py-files`` contract as
-    the JPEG/PNG/GIF/BMP stages (captured-root sys.path fallback)."""
-    import os
+    def features(payload: bytes):
+        rgb, info = decode_tiff(payload)
+        h, w, _ = rgb.shape
+        total = int(rgb.sum(dtype="int64"))
+        return (
+            w, h, 3, info["compression"], info["photometric"],
+            total, total / (h * w * 3), int(rgb.min()), int(rgb.max()),
+        )
 
-    pkg_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import sys
-
-        import pandas as pd
-
-        try:
-            from crawl_streams_spark.operators.tiff import (
-                TiffError,
-                decode_tiff,
-            )
-        except ModuleNotFoundError:  # worker missing the package on path
-            if pkg_root not in sys.path:
-                sys.path.insert(0, pkg_root)
-            from crawl_streams_spark.operators.tiff import (
-                TiffError,
-                decode_tiff,
-            )
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append((mid,) + (None,) * 9 + ("null payload",))
-                    continue
-                try:
-                    rgb, info = decode_tiff(bytes(payload))
-                except TiffError as e:
-                    rows.append((mid,) + (None,) * 9 + (str(e),))
-                    continue
-                h, w, _ = rgb.shape
-                total = int(rgb.sum(dtype="int64"))
-                n = h * w * 3
-                rows.append(
-                    (
-                        mid, w, h, 3,
-                        info["compression"], info["photometric"],
-                        total, total / n,
-                        int(rgb.min()), int(rgb.max()), None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TIFF_DECODED_SCHEMA.fields]
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=TIFF_DECODED_SCHEMA
-    )
+    return _decode_stage(df, TIFF_DECODED_SCHEMA, features, TiffError)

@@ -452,23 +452,11 @@ def media_jpeg_features(spark, sf_dir):
     from ..operators import multimodal as MM
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    import os as _os
-
-    pkg_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
 
     def synth(batches):
-        import sys
-
         import pandas as pd
 
-        try:
-            from crawl_streams_spark.operators.jpeg import gray_jpeg
-        except ModuleNotFoundError:
-            if pkg_root not in sys.path:
-                sys.path.insert(0, pkg_root)
-            from crawl_streams_spark.operators.jpeg import gray_jpeg
+        from crawl_streams_spark.operators.jpeg import gray_jpeg
 
         for pdf in batches:
             payloads = [
@@ -541,23 +529,11 @@ def media_png_features(spark, sf_dir):
     from ..operators import multimodal as MM
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    import os as _os
-
-    pkg_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
 
     def synth(batches):
-        import sys
-
         import pandas as pd
 
-        try:
-            from crawl_streams_spark.operators.png import pattern_png
-        except ModuleNotFoundError:
-            if pkg_root not in sys.path:
-                sys.path.insert(0, pkg_root)
-            from crawl_streams_spark.operators.png import pattern_png
+        from crawl_streams_spark.operators.png import pattern_png
 
         for pdf in batches:
             payloads = [
@@ -627,23 +603,11 @@ def media_gif_features(spark, sf_dir):
     from ..operators import multimodal as MM
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    import os as _os
-
-    pkg_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
 
     def synth(batches):
-        import sys
-
         import pandas as pd
 
-        try:
-            from crawl_streams_spark.operators.gif import pattern_gif
-        except ModuleNotFoundError:
-            if pkg_root not in sys.path:
-                sys.path.insert(0, pkg_root)
-            from crawl_streams_spark.operators.gif import pattern_gif
+        from crawl_streams_spark.operators.gif import pattern_gif
 
         for pdf in batches:
             payloads = [
@@ -716,23 +680,11 @@ def media_bmp_features(spark, sf_dir):
     from ..operators import multimodal as MM
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    import os as _os
-
-    pkg_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
 
     def synth(batches):
-        import sys
-
         import pandas as pd
 
-        try:
-            from crawl_streams_spark.operators.bmp import pattern_bmp
-        except ModuleNotFoundError:
-            if pkg_root not in sys.path:
-                sys.path.insert(0, pkg_root)
-            from crawl_streams_spark.operators.bmp import pattern_bmp
+        from crawl_streams_spark.operators.bmp import pattern_bmp
 
         for pdf in batches:
             payloads = [
@@ -1744,23 +1696,11 @@ def media_tiff_features(spark, sf_dir):
     from ..operators import multimodal as MM
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    import os as _os
-
-    pkg_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
 
     def synth(batches):
-        import sys
-
         import pandas as pd
 
-        try:
-            from crawl_streams_spark.operators.tiff import pattern_tiff
-        except ModuleNotFoundError:
-            if pkg_root not in sys.path:
-                sys.path.insert(0, pkg_root)
-            from crawl_streams_spark.operators.tiff import pattern_tiff
+        from crawl_streams_spark.operators.tiff import pattern_tiff
 
         for pdf in batches:
             payloads = [
@@ -1838,23 +1778,11 @@ def media_tiff_lzw_features(spark, sf_dir):
     from ..operators import multimodal as MM
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    import os as _os
-
-    pkg_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
 
     def synth(batches):
-        import sys
-
         import pandas as pd
 
-        try:
-            from crawl_streams_spark.operators.tiff import pattern_tiff_lzw
-        except ModuleNotFoundError:
-            if pkg_root not in sys.path:
-                sys.path.insert(0, pkg_root)
-            from crawl_streams_spark.operators.tiff import pattern_tiff_lzw
+        from crawl_streams_spark.operators.tiff import pattern_tiff_lzw
 
         for pdf in batches:
             payloads = [
@@ -1926,23 +1854,11 @@ def media_png16_features(spark, sf_dir):
     from ..operators import multimodal as MM
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    import os as _os
-
-    pkg_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
 
     def synth(batches):
-        import sys
-
         import pandas as pd
 
-        try:
-            from crawl_streams_spark.operators.png import pattern_png16
-        except ModuleNotFoundError:
-            if pkg_root not in sys.path:
-                sys.path.insert(0, pkg_root)
-            from crawl_streams_spark.operators.png import pattern_png16
+        from crawl_streams_spark.operators.png import pattern_png16
 
         for pdf in batches:
             payloads = [

@@ -11,6 +11,9 @@ Catalyst/AQE exploit all cores and so plans stay scale-ready:
   columnar batches, not pickled rows.
 - shuffle partitions sized to the local core count; on a real cluster this is
   overridden (or left to AQE's coalescing with a high initial value).
+- the package root on the Python workers' PYTHONPATH — every Arrow stage
+  that imports ``crawl_streams_spark`` on a worker finds it wherever the
+  driver runs from (``_ensure_worker_path``).
 """
 
 from __future__ import annotations
@@ -44,9 +47,31 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+#: The directory that holds the ``crawl_streams_spark`` package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _ensure_worker_path(spark: SparkSession) -> None:
+    """Append the package root to the PYTHONPATH the session hands its
+    Python workers, keeping any entries already there. Idempotent.
+
+    A driver's own ``sys.path`` never reaches a worker: a worker starts
+    with the PYTHONPATH of the ``SparkContext.environment`` its Python
+    function was created with. Spark keeps one worker daemon per distinct
+    environment, so call this before the session's first Python stage.
+    This covers local mode and shared filesystems; other clusters still
+    ship the package with ``--py-files`` or a venv archive."""
+    env = spark.sparkContext.environment
+    entries = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in entries:
+        env["PYTHONPATH"] = os.pathsep.join(entries + [_PACKAGE_ROOT])
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing session (driver-provided
-    sessions included). Safe to call repeatedly."""
+    sessions included) and put the package root on its workers' path.
+    Safe to call repeatedly."""
+    _ensure_worker_path(spark)
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)

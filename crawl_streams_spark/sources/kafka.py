@@ -8,8 +8,8 @@ readers/writers (option dicts are unit-tested); the semantics they encode:
   becomes ``trigger(availableNow=True)`` — read everything available, stop.
 - SRC-2 event-time range scan: the reference resolves timestamps to
   per-partition offsets broker-side and seeks (streamer.py:132-164);
-  Spark's ``startingOffsetsByTimestamp`` / ``endingOffsetsByTimestamp``
-  push the same bounds to the broker.
+  Spark's global ``startingTimestamp`` / ``endingTimestamp`` push the same
+  bounds to the broker for every partition of the topic.
 - SRC-3 continuous subscribe with group id + crash retry
   (analysis.py:175-197): readStream + checkpointLocation — restart/retry
   and offset tracking move into the Spark runtime, strictly stronger than
@@ -21,8 +21,6 @@ readers/writers (option dicts are unit-tested); the semantics they encode:
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -56,21 +54,20 @@ def time_range_options(
     topic: str,
     from_epoch_ms: int,
     to_epoch_ms: int,
-    num_partitions: int = 16,
 ) -> dict[str, str]:
     """SRC-2 — event-time range pushed to the broker. The reference maps
     [from,to) to offsets with offsets_for_times per partition
-    (streamer.py:143-148); Spark takes the same per-partition timestamp
-    maps. ``-1`` end semantics: partitions with no data past `to` read to
-    latest, matching the reference's stop-set behavior
-    (streamer.py:150-164)."""
-    start = {topic: {str(p): from_epoch_ms for p in range(num_partitions)}}
-    end = {topic: {str(p): to_epoch_ms for p in range(num_partitions)}}
+    (streamer.py:143-148); Spark's global ``startingTimestamp`` /
+    ``endingTimestamp`` (Spark >= 3.2) apply one bound to every partition
+    of the topic, whatever its partition count — a by-timestamp map must
+    name every partition or Spark rejects it. A partition with no offset
+    past ``to`` reads to latest, matching the reference's stop-set
+    behavior (streamer.py:150-164)."""
     return {
         "kafka.bootstrap.servers": brokers,
         "subscribe": topic,
-        "startingOffsetsByTimestamp": json.dumps(start),
-        "endingOffsetsByTimestamp": json.dumps(end),
+        "startingTimestamp": str(from_epoch_ms),
+        "endingTimestamp": str(to_epoch_ms),
         "failOnDataLoss": "false",
     }
 
@@ -89,13 +86,11 @@ def read_topic_time_range(
     topic: str,
     from_epoch_ms: int,
     to_epoch_ms: int,
-    num_partitions: int = 16,
 ) -> DataFrame:
     """SRC-2 — bounded event-time range scan."""
     reader = spark.read.format("kafka")
-    for k, v in time_range_options(
-        brokers, topic, from_epoch_ms, to_epoch_ms, num_partitions
-    ).items():
+    opts = time_range_options(brokers, topic, from_epoch_ms, to_epoch_ms)
+    for k, v in opts.items():
         reader = reader.option(k, v)
     return reader.load()
 

@@ -57,11 +57,26 @@ def host_stats_stream(events: DataFrame, window: str = "1 hour") -> DataFrame:
     )
 
 
+def _write_json_atomic(doc: dict, path: str) -> None:
+    """Write ``doc`` as JSON to a temp file in ``path``'s directory, then
+    os.replace it into place — readers never observe a partial file (the
+    reference's tmp+rename, analysis.py:232-236). The temp file is removed
+    if anything fails before the rename."""
+    d = os.path.dirname(os.path.abspath(path)) or "."
+    fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(doc, f)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+
+
 def atomic_snapshot_writer(path: str, top_n: int = 500):
-    """SNK-3 foreachBatch sink: serialize the batch's aggregate rows to
-    JSON, write to a temp file in the same directory, os.replace into
-    place — readers never observe a partial file (the reference's
-    tmp+rename, analysis.py:232-236)."""
+    """SNK-3 foreachBatch sink: the batch's top-N aggregate rows as one
+    JSON document, replaced atomically (``_write_json_atomic``)."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         rows = (
@@ -74,16 +89,7 @@ def atomic_snapshot_writer(path: str, top_n: int = 500):
             "batch_id": batch_id,
             "hosts": [json.loads(r) for r in rows],
         }
-        d = os.path.dirname(os.path.abspath(path)) or "."
-        fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(doc, f)
-            os.replace(tmp, path)
-        except BaseException:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-            raise
+        _write_json_atomic(doc, path)
 
     return write
 
@@ -182,16 +188,7 @@ def snapshot_from_rollup(
         .limit(top_n)
     )
     doc = {"hosts": [json.loads(r) for r in hosts.toJSON().collect()]}
-    d = os.path.dirname(os.path.abspath(snapshot_path)) or "."
-    fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, snapshot_path)
-    except BaseException:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-        raise
+    _write_json_atomic(doc, snapshot_path)
 
 
 def session_stats_stream(

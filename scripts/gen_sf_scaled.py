@@ -2,7 +2,7 @@
 (VERDICT r13 item 2: "prove one structural win at sf>=0.3").
 
 NOT test data: /root/testdata is read-only and untouched; output goes to
-a scratch dir and is used only by measurement scripts (ab_ckpt.py etc.),
+a scratch dir and is used only by measurement runs (larger-SF A/Bs),
 never by bench.py or the oracle harness. Each of the K copies preserves
 the per-copy distributions exactly, and copies are kept disjoint so the
 workload scales linearly rather than quadratically:

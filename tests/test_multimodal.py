@@ -1,91 +1,9 @@
-"""Multimodal plumbing: binary payload column + mapInPandas decode stage
-(stubbed codecs, real Spark contract)."""
+"""Multimodal plumbing: binary payload column + the real codec-free
+WAV and PPM decoders over the shared mapInPandas decode stage."""
 
 from __future__ import annotations
 
-import hashlib
-
-from crawl_streams_spark.operators.multimodal import (
-    DECODED_SCHEMA,
-    decode_media,
-    documents_as_media,
-    media_summary,
-)
 from crawl_streams_spark.operators import multimodal as MM
-from crawl_streams_spark.tables import load_table
-
-
-def test_decode_roundtrip(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    media = documents_as_media(docs)
-    decoded = decode_media(media)
-    assert decoded.schema == DECODED_SCHEMA
-    rows = {r["media_id"]: r for r in decoded.collect()}
-    for d in docs.collect():
-        r = rows[d["doc_id"]]
-        payload = d["text"].encode("utf-8")
-        assert r["n_bytes"] == len(payload)
-        assert r["payload_sha1"] == hashlib.sha1(payload).hexdigest()
-        assert 1 <= r["width"] <= 64 and 1 <= r["height"] <= 64
-        assert len(r["features"]) == 8
-
-
-def test_null_payload_passthrough(spark):
-    import pyspark.sql.functions as F
-
-    df = spark.range(3).select(
-        F.col("id").alias("media_id"),
-        F.when(F.col("id") == 1, F.lit(b"x")).alias("payload"),
-        F.lit("image").alias("media_type"),
-        F.lit("image/x-fake").alias("mime"),
-    )
-    rows = {r["media_id"]: r for r in decode_media(df).collect()}
-    assert rows[0]["n_bytes"] is None and rows[0]["features"] is None
-    assert rows[1]["n_bytes"] == 1
-
-
-def test_media_summary(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(100)
-    s = media_summary(decode_media(documents_as_media(docs))).collect()
-    assert len(s) == 1
-    row = s[0]
-    assert row["n_media"] == 100
-    assert row["n_distinct_payloads"] == 100  # sample texts are unique
-    assert row["total_bytes"] > 0
-
-
-def test_resize_geometry(spark, sf_dir):
-    from crawl_streams_spark.operators.multimodal import resize_media
-
-    docs = load_table(spark, sf_dir, "documents").limit(40)
-    decoded = decode_media(documents_as_media(docs))
-    resized = {r["media_id"]: r for r in resize_media(decoded, max_side=32).collect()}
-    for r in decoded.collect():
-        z = resized[r["media_id"]]
-        assert z["resized_width"] <= 32 and z["resized_height"] <= 32
-        if r["width"] <= 32 and r["height"] <= 32:
-            assert z["scale"] == 1.0  # never upscale
-        else:
-            # independently recomputed fit-geometry must match
-            scale = min(32 / r["width"], 32 / r["height"])
-            assert abs(z["resized_width"] - r["width"] * scale) <= 0.5 + 1e-9
-            assert abs(z["resized_height"] - r["height"] * scale) <= 0.5 + 1e-9
-
-
-def test_frame_sampling_expands_rows(spark, sf_dir):
-    from crawl_streams_spark.operators.multimodal import sample_frames
-
-    docs = load_table(spark, sf_dir, "documents").limit(10)
-    media = documents_as_media(docs)
-    frames = sample_frames(media, fps=2.0, duration_s=3).collect()
-    assert len(frames) == 10 * 6  # 1 → N row expansion
-    by_media = {}
-    for f in frames:
-        by_media.setdefault(f["media_id"], []).append(f)
-    for mid, fs in by_media.items():
-        assert sorted(f["frame_index"] for f in fs) == list(range(6))
-        assert len({f["frame_sha1"] for f in fs}) == 6  # frames distinct
-        assert {f["frame_ts_ms"] for f in fs} == {0, 500, 1000, 1500, 2000, 2500}
 
 
 # ---- REAL codec-free decoders (WAV / PPM) ------------------------------
@@ -177,3 +95,16 @@ def test_ppm_malformed_reports_error(spark):
         _media_df(spark, [b"P5\n1 1\n255\nx", b"P6\n1000 1000\n255\nxx"])
     ).collect()
     assert all(r["error"] is not None for r in rows)
+
+
+def test_ppm_empty_or_negative_dimensions_quarantine_per_row(spark):
+    """A P6 header with a zero or negative side is malformed: both stages
+    report it in ``error``, not as a zero-width row with NULL means
+    (decode) or a division by zero that fails the whole stage (resize)."""
+    payloads = [b"P6\n0 5\n255\nxx", b"P6\n-1 5\n255\nxxxx", None]
+    for stage in (MM.decode_ppm, MM.resize_ppm):
+        rows = stage(_media_df(spark, payloads)).collect()
+        assert [r["media_id"] for r in rows] == [0, 1, 2]
+        assert rows[0]["error"] == "bad dimensions 0x5"
+        assert rows[1]["error"] == "bad dimensions -1x5"
+        assert rows[2]["error"] == "null payload"

@@ -49,12 +49,12 @@ def test_topic_options_semantics():
 
 
 def test_time_range_options_pushdown():
-    opts = kafka.time_range_options("k:9092", "fc.crawled", 1000, 2000, num_partitions=4)
-    start = json.loads(opts["startingOffsetsByTimestamp"])
-    end = json.loads(opts["endingOffsetsByTimestamp"])
-    # SRC-2: every partition gets the event-time bounds, broker-side
-    assert start["fc.crawled"] == {str(p): 1000 for p in range(4)}
-    assert end["fc.crawled"] == {str(p): 2000 for p in range(4)}
+    opts = kafka.time_range_options("k:9092", "fc.crawled", 1000, 2000)
+    # SRC-2: one event-time bound for every partition, broker-side — no
+    # per-partition map, so the topic's partition count does not matter
+    assert opts["startingTimestamp"] == "1000"
+    assert opts["endingTimestamp"] == "2000"
+    assert not any("OffsetsByTimestamp" in k for k in opts)
 
 
 def test_sink_options_durability():
@@ -63,39 +63,34 @@ def test_sink_options_durability():
 
 
 # --- wire-format goldens ---------------------------------------------------
-# No broker or Kafka connector jar exists in this environment, so the wire
-# JSON is pinned byte-for-byte against the shape Spark's KafkaSourceProvider
-# parses: {"topic": {"<partition>": <epoch_ms LONG>}} — partition ids are
-# STRING keys, timestamps are UNQUOTED integers (a quoted timestamp fails
-# Spark's Jackson Long parse). The fixture mirrors the reference's
-# offsets_for_times maps (streamer.py:134-148: every partition of the topic
-# gets the same from/to epoch-millis bound).
+# No broker or Kafka connector jar exists in this environment, so these pin
+# the option dict only: Spark's KafkaSourceProvider reads the global
+# startingTimestamp / endingTimestamp options (Spark >= 3.2) as decimal
+# epoch-millis strings and applies each to every partition of the topic,
+# as the reference's offsets_for_times maps did (streamer.py:134-148).
 
 def test_time_range_wire_json_golden():
     opts = kafka.time_range_options(
-        "k:9092", "fc.crawled", 1575000000000, 1575003600000, num_partitions=3
+        "k:9092", "fc.crawled", 1575000000000, 1575003600000
     )
-    assert opts["startingOffsetsByTimestamp"] == (
-        '{"fc.crawled": {"0": 1575000000000, "1": 1575000000000, '
-        '"2": 1575000000000}}'
-    )
-    assert opts["endingOffsetsByTimestamp"] == (
-        '{"fc.crawled": {"0": 1575003600000, "1": 1575003600000, '
-        '"2": 1575003600000}}'
-    )
+    assert opts == {
+        "kafka.bootstrap.servers": "k:9092",
+        "subscribe": "fc.crawled",
+        "startingTimestamp": "1575000000000",
+        "endingTimestamp": "1575003600000",
+        "failOnDataLoss": "false",
+    }
 
 
 def test_time_range_wire_json_types():
-    """Type discipline Spark's parser requires: str topic → str partition →
-    int (not str, not float) epoch millis."""
-    opts = kafka.time_range_options("k:9092", "t", 1000, 2000, num_partitions=16)
-    for key in ("startingOffsetsByTimestamp", "endingOffsetsByTimestamp"):
-        parsed = json.loads(opts[key])
-        assert set(parsed) == {"t"}
-        for part, ts in parsed["t"].items():
-            assert isinstance(part, str) and part.isdigit()
-            assert isinstance(ts, int), f"epoch must serialize unquoted: {ts!r}"
-        assert sorted(int(p) for p in parsed["t"]) == list(range(16))
+    """Type discipline Spark's parser requires: every option value is a
+    string, and each timestamp a plain decimal long (no quotes, no
+    fraction, no exponent)."""
+    opts = kafka.time_range_options("k:9092", "t", 1000, 2000)
+    assert all(isinstance(v, str) for v in opts.values())
+    bounds = [opts["startingTimestamp"], opts["endingTimestamp"]]
+    assert all(b.isdigit() for b in bounds), bounds
+    assert [int(b) for b in bounds] == [1000, 2000]
 
 
 def test_topic_options_exact_golden():
